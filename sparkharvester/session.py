@@ -4,6 +4,19 @@ Defaults chosen for correctness-parity with the DuckDB oracle (UTC
 session timezone, ANSI off) and for scale (AQE on with skew-join
 handling, shuffle partitions sized for the local test harness but
 overridable for a real cluster via normal Spark conf).
+
+Python workers start from ``sparkharvester.pydaemon`` instead of
+``pyspark.daemon`` when executors can import it at daemon start: on a
+``local`` master, with ``sparkharvester`` loaded from a plain directory,
+whose parent is then put on the workers' ``PYTHONPATH``.  On CPython
+3.10-3.12 pyspark's per-task ``importlib.invalidate_caches()`` made
+every zip importer re-read ``pyspark.zip`` (about 0.25 s of CPU per
+task on a 4-vCPU host); the engine's daemon re-reads an archive only
+when its modification time or size changed (see that module for the
+versions checked and when an archive is still re-read).  Any other
+deploy keeps the stock daemon: a ``--py-files`` zip reaches a worker's
+``sys.path`` only per task, after its daemon has started, and a
+cluster's executors need not see the driver's directory.
 """
 from __future__ import annotations
 
@@ -39,9 +52,26 @@ def get_spark(
                 os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in _with_worker_daemon(master, __file__, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _with_worker_daemon(master: str, module_file: str,
+                        extra_conf: dict[str, str] | None) -> dict[str, str]:
+    """``extra_conf`` plus the conf that starts Python workers from
+    ``sparkharvester.pydaemon`` where executors can import it at daemon
+    start.  ``module_file`` is this module's ``__file__``; inside a zip
+    it names no file, so the package is not a plain directory."""
+    conf = dict(extra_conf or {})
+    pkg_dir = os.path.dirname(os.path.abspath(module_file))
+    if (master.startswith("local")
+            and os.path.isfile(os.path.join(pkg_dir, "pydaemon.py"))):
+        conf.setdefault("spark.python.daemon.module", "sparkharvester.pydaemon")
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(
+            p for p in (os.path.dirname(pkg_dir), conf.get(key)) if p)
+    return conf
 
 
 TABLES = (
