@@ -76,18 +76,6 @@ def ioc_column(text: Column, ioc_type: str) -> Column:
     return _sorted_distinct(raw)
 
 
-def ioc_columns(text: Column) -> dict[str, Column]:
-    """All 11 IOC array columns + pgp_present + ioc_total."""
-    cols = {t: ioc_column(text, t) for t in IOC_LIST_FIELDS}
-    cols["pgp_present"] = text.contains(PGP_MARKER)
-    total = None
-    for t in IOC_LIST_FIELDS:
-        s = F.size(cols[t])
-        total = s if total is None else total + s
-    cols["ioc_total"] = total
-    return cols
-
-
 def ioc_total_column(text: Column) -> Column:
     """``ioc_total`` alone, without materializing the 11 sorted arrays:
     sum of size(array_distinct(extract_all)) per type (the ipv4
@@ -143,29 +131,6 @@ def with_iocs(df: DataFrame, text_col: str = "text") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def word_count(text_lower: Column) -> Column:
-    """max(len(text.split()), 1) — Python str.split() semantics (no empty
-    tokens), intelligence.py:299.
-
-    regexp_count, not size(regexp_extract_all): the count is identical
-    but extract_all materializes every token string into an array just
-    to measure its length (measured ~4x slower at sf0.1)."""
-    return F.greatest(
-        F.regexp_count(text_lower, F.lit(r"\S+")),
-        F.lit(1),
-    )
-
-
-def substring_count(haystack: Column, needle: str) -> Column:
-    """Non-overlapping occurrence count == Python str.count
-    (intelligence.py:304)."""
-    n = len(needle)
-    return (
-        (F.length(haystack) - F.length(F.replace(haystack, F.lit(needle), F.lit(""))))
-        / F.lit(n)
-    ).cast("int")
-
-
 def category_hits(text_lower: Column, category: str) -> Column:
     """Total keyword hits for one category (intelligence.py:303-304).
 
@@ -201,12 +166,13 @@ def _hits_udf():
     The word count rides the same Arrow pass deliberately: it is
     consumed by all 9 score expressions, and when the risk-label
     predicate is pushed down into a Filter the optimizer INLINES the
-    producer expression per use — a column-expression word_count would
+    producer expression per use — a column-expression word count would
     re-embed the enriched-text concat + a regexp scan 9 times in one
     condition (measured: trips Janino's 64 KB limit -> whole stage
     silently interpreted, and recomputes the regex 9x per row even
     then).  As a UDF output slot it is a cheap element_at everywhere.
-    Same semantics as word_count(): max(#\\S+ runs, 1)."""
+    The word count is max(#\\S+ runs, 1), i.e. max(len(text.split()), 1)
+    with Python's str.split() (no empty tokens), intelligence.py:299."""
     if "hits" not in _UDF_CACHE:
         import re
 

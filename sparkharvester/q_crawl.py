@@ -11,7 +11,7 @@ from .enrich import synth_url_spark, synth_url_sql
 from .frontier import CrawlConfig, admit_per_host, run_crawl
 from .images import check_invariants, make_images_df
 from .registry import register
-from .session import load
+from .session import load, load_spread
 from .synth import SynthConfig, seed_urls
 from .urlnorm import (
     canonicalize_expr,
@@ -1029,10 +1029,9 @@ FROM m
 def crawl_robots_precedence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .robots import attach_robots_blocked
 
-    d = load(spark, sf_dir, "documents").select("doc_id")
-    # spread the doc_id-only rows: the single-row-group scan otherwise
-    # runs the whole rlike matching pass on one partition (round 6)
-    d = d.repartition(spark.sparkContext.defaultParallelism)
+    # spread: the single-row-group scan otherwise runs the whole rlike
+    # matching pass on one partition (round 6)
+    d = load_spread(spark, sf_dir, "documents").select("doc_id")
     cand = d.select(
         "doc_id",
         F.concat(

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark import StorageLevel
@@ -57,93 +57,13 @@ DF_CAP = 50             # drop shingles present in more docs (stop-shingles)
 
 _TOKEN_RE = r"[a-z0-9]+"
 
-
-# ---------------------------------------------------------------------------
-# shared fragments — Spark
-# ---------------------------------------------------------------------------
-
-
-def tokens_col(text: Column) -> Column:
-    return F.regexp_extract_all(F.lower(text), F.lit(_TOKEN_RE), F.lit(0))
-
-
-def shingles_col(toks: Column) -> Column:
-    """Word 3-gram shingles; [] when fewer than 3 tokens.
-
-    IMPORTANT: pass a *materialized column reference* (e.g.
-    ``F.col("toks")``), not the tokenization expression itself — every
-    ``element_at`` in the lambda embeds a full copy of its argument
-    tree, so an inline regexp-tokenizer would re-run once per shingle
-    element (measured 10x slowdown at sf0.1)."""
-    n = F.size(toks)
-    return F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(1), n - 2),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, i),
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 _UDF_CACHE: dict[str, object] = {}
 
 
-def _shingles_udf():
-    """Vectorized pandas shingler: text -> word-3-gram array.
-
-    Same semantics as shingles_col/tokens_col (and the DuckDB oracle
-    SQL), but ~20x faster than the JVM higher-order-function chain:
-    per-element lambda evaluation in Spark's interpreted HOF path costs
-    ~20µs/shingle; a Python list join costs <1µs (measured at sf0.1:
-    11.4s -> sub-second for the shingle stage)."""
-    if "sh" not in _UDF_CACHE:
-        import re
-
-        from pyspark.sql.functions import pandas_udf
-
-        tok_re = re.compile(_TOKEN_RE)
-
-        def shingle(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                toks = tok_re.findall(t.lower())
-                out.append([
-                    f"{toks[i]} {toks[i + 1]} {toks[i + 2]}"
-                    for i in range(len(toks) - 2)
-                ])
-            return pd.Series(out, index=texts.index)
-
-        # nondeterministic ON PURPOSE: _docs_shingled filters on
-        # size(shingles) > 0, and a deterministic UDF gets duplicated
-        # around the pushed-down filter (guide §4.4) — see the note
-        # there.
-        _UDF_CACHE["sh"] = pandas_udf(shingle, "array<string>") \
-            .asNondeterministic()
-    return _UDF_CACHE["sh"]
-
-
-def _docs_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_spread(spark, sf_dir, "documents").select("doc_id", "text")
-    # the shingler is marked nondeterministic so the size(shingles) > 0
-    # filter CANNOT be pushed below it: the pushed-down filter made the
-    # optimizer evaluate the ArrowEvalPython node TWICE, the first copy
-    # below the spread-exchange on the scan's single input partition
-    # (guide §4.4; measured 2.4 s vs 0.5 s for this stage at sf1.0).
-    # No upstream-pushable filter exists on this path, so the only
-    # optimization ND blocks is the harmful one.
-    return (
-        d.withColumn("shingles", _shingles_udf()(F.col("text")))
-        .filter(F.size("shingles") > 0)
-        .select("doc_id", "shingles")
-    )
-
-
+# ---------------------------------------------------------------------------
 # shared fragments — DuckDB
+# ---------------------------------------------------------------------------
+
 _TOKENS_SQL = f"regexp_extract_all(lower(text), '{_TOKEN_RE}')"
 
 _SHINGLES_SQL = f"""(
@@ -193,30 +113,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _minhash_h1h2(shingles: Column) -> tuple[Column, Column]:
-    """Double-hashing base: ONE md5 per shingle → (h1, h2) 60/56-bit int
-    arrays; the K minhashes derive as min(h1 + j*h2) — the classic
-    Kirsch-Mitzenmacher construction, cutting hash work K-fold.
-    h1 < 2^60 and j*h2 < 15*2^56 < 2^60, so sums stay inside int64."""
-    md5s = F.transform(shingles, lambda s: F.md5(s))
-    h1 = F.transform(md5s, lambda m: F.conv(F.substring(m, 1, 15), 16, 10)
-                     .cast("long"))
-    h2 = F.transform(md5s, lambda m: F.conv(F.substring(m, 17, 14), 16, 10)
-                     .cast("long").bitwiseOR(F.lit(1)))
-    return h1, h2
-
-
-def _minhash_cols() -> list[Column]:
-    """K minhash columns from staged __h1/__h2 array columns."""
-    return [
-        F.array_min(
-            F.zip_with(F.col("__h1"), F.col("__h2"),
-                       lambda a, b: a + F.lit(j) * b)
-        ).alias(f"mh_{j}")
-        for j in range(MINHASH_K)
-    ]
-
-
 _H1_SQL = ("list_transform(shingles, s -> CAST('0x' || substr(md5(s), 1, 15)"
            " AS BIGINT))")
 _H2_SQL = ("list_transform(shingles, s -> CAST('0x' || substr(md5(s), 17, 14)"
@@ -231,67 +127,33 @@ def _minhash_sql_cols() -> str:
     )
 
 
-def _sig_udf():
-    """Vectorized pandas minhash: shingle array -> K signature ints.
-
-    Same md5-prefix double-hashing arithmetic as _minhash_h1h2 /
-    _H1_SQL/_H2_SQL (verified equal vs the DuckDB oracle); computing
-    all K mins in numpy avoids 16 interpreted JVM zip_with passes."""
-    if "sig" not in _UDF_CACHE:
-        import hashlib
-
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
-
-        j = np.arange(MINHASH_K, dtype=np.int64)
-
-        def sigs(shingle_lists: pd.Series) -> pd.Series:
-            out = []
-            for sh in shingle_lists:
-                h1 = np.empty(len(sh), dtype=np.int64)
-                h2 = np.empty(len(sh), dtype=np.int64)
-                for i, s in enumerate(sh):
-                    m = hashlib.md5(s.encode()).hexdigest()
-                    h1[i] = int(m[0:15], 16)
-                    h2[i] = int(m[16:30], 16) | 1
-                # min over shingles of h1 + j*h2, per j
-                out.append((h1[:, None] + h2[:, None] * j[None, :])
-                           .min(axis=0).tolist())
-            return pd.Series(out, index=shingle_lists.index)
-
-        _UDF_CACHE["sig"] = pandas_udf(sigs, "array<long>")
-    return _UDF_CACHE["sig"]
-
-
-
 # ---------------------------------------------------------------------------
 # fused shingle→minhash path (round 6; guide §4.2): ONE Arrow crossing
 # computes the distinct shingle set and the K minhashes per doc, so the
-# shingle-string arrays never make a second JVM↔Python round-trip
-# through the sig stage (the old pipeline shipped them out of the
-# shingler, through the DISK_ONLY cache, and back INTO _sig_udf).
+# shingle-string arrays never make a second JVM↔Python round-trip.
+# Batch queries and streaming.stream_lsh_candidates share it.  Python,
+# not a JVM expression: Spark's interpreted higher-order-function path
+# costs ~20 µs per shingle element, a Python list join < 1 µs (measured
+# at sf0.1: 11.4 s → sub-second for the shingle stage).
 # Arithmetic identities keeping oracle parity exact:
 #  - minhash over the DISTINCT shingle set == minhash over the raw
 #    multiset (min is idempotent under duplicates);
 #  - int.from_bytes(md5.digest()) bit-slices equal the
-#    int(hexdigest[a:b], 16) slices (property-tested);
-#  - band hashes derive in the JVM from the sig ints, same
-#    md5(concat(CAST(mh AS STRING)...)) as before.
-# The streaming path keeps the original _shingles_udf/_band_table pair
-# (its batch-parity tests pin that shape).
+#    int(hexdigest[a:b], 16) slices _H1_SQL/_H2_SQL take
+#    (tests/test_properties.py);
+#  - band hashes derive in the JVM from the sig ints as
+#    md5(concat(CAST(mh AS STRING)...)), the oracle's band expression.
 # ---------------------------------------------------------------------------
 
 
-def _fused_sig_udf(with_sets: bool):
-    """pandas UDF: text → struct(sigs array<long>, n int[, sh]).
+def _fused_sig_udf():
+    """pandas UDF: text → struct(sigs array<long>, n int, sh array<string>).
 
-    ``with_sets`` additionally emits the distinct shingle array for
-    exact-Jaccard verification; n = |distinct shingles| (0 ⇒ the doc
-    has no shingle and is dropped by the caller's n > 0 filter — the
-    UDFs are nondeterministic so that filter cannot duplicate them,
-    guide §4.4)."""
-    key = "fused_sets" if with_sets else "fused_sigs"
-    if key not in _UDF_CACHE:
+    sh is the distinct shingle array for exact-Jaccard verification;
+    n = |sh| (0 ⇒ the doc has no shingle and is dropped by the caller's
+    n > 0 filter — the UDF is nondeterministic so that filter cannot
+    duplicate it, guide §4.4)."""
+    if "fused" not in _UDF_CACHE:
         import hashlib
         import re
 
@@ -310,8 +172,7 @@ def _fused_sig_udf(with_sets: bool):
                     f"{toks[i]} {toks[i + 1]} {toks[i + 2]}"
                     for i in range(len(toks) - 2)))
                 n_l.append(len(sh))
-                if with_sets:
-                    sh_l.append(sh)
+                sh_l.append(sh)
                 if not sh:
                     sig_l.append(None)
                     continue
@@ -323,36 +184,39 @@ def _fused_sig_udf(with_sets: bool):
                     h2[i] = int.from_bytes(d[8:15], "big") | 1
                 sig_l.append((h1[:, None] + h2[:, None] * j[None, :])
                              .min(axis=0).tolist())
-            cols = {"sigs": sig_l, "n": n_l}
-            if with_sets:
-                cols["sh"] = sh_l
-            return pd.DataFrame(cols, index=texts.index)
+            return pd.DataFrame({"sigs": sig_l, "n": n_l, "sh": sh_l},
+                                index=texts.index)
 
-        fields = "sigs array<long>, n int" + (
-            ", sh array<string>" if with_sets else "")
-        _UDF_CACHE[key] = pandas_udf(fused, fields).asNondeterministic()
-    return _UDF_CACHE[key]
+        _UDF_CACHE["fused"] = pandas_udf(
+            fused, "sigs array<long>, n int, sh array<string>"
+        ).asNondeterministic()
+    return _UDF_CACHE["fused"]
 
 
-def _docs_sigged(spark: SparkSession, sf_dir: str,
-                 with_sets: bool) -> DataFrame:
-    """(doc_id, sigs, n[, sh]) for every doc with >= 1 shingle."""
-    d = load_spread(spark, sf_dir, "documents").select("doc_id", "text")
-    cols = ["doc_id", F.col("__t.sigs").alias("sigs"),
-            F.col("__t.n").alias("n")]
-    if with_sets:
-        cols.append(F.col("__t.sh").alias("sh"))
+def _sigged(docs: DataFrame) -> DataFrame:
+    """(doc_id, sigs, n, sh) for every (doc_id, text) row with >= 1
+    shingle; *docs* may be a batch or a streaming frame."""
     return (
-        d.withColumn("__t", _fused_sig_udf(with_sets)(F.col("text")))
+        docs.withColumn("__t", _fused_sig_udf()(F.col("text")))
         .filter(F.col("__t.n") > 0)
-        .select(*cols)
+        .select("doc_id", F.col("__t.sigs").alias("sigs"),
+                F.col("__t.n").alias("n"), F.col("__t.sh").alias("sh"))
     )
+
+
+def _docs_sigged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """_sigged over ``documents``, persisted DISK_ONLY.  Every LSH-family
+    query builds this SAME plan: Spark's cache manager matches cached
+    plans by structure, so in one session (the bench, dedup_components,
+    dedup_multimodal) the corpus pass runs once and the others read
+    the cache."""
+    d = load_spread(spark, sf_dir, "documents").select("doc_id", "text")
+    return _sigged(d).persist(_SHINGLE_CACHE_LEVEL)
 
 
 def _bands_from_sigs(sigged: DataFrame,
                      carry: tuple[str, ...] = ()) -> DataFrame:
-    """(doc_id[, *carry], band_id, band_hash) from a sigs column — the
-    JVM twin of _band_table's band derivation (identical band_hash)."""
+    """(doc_id[, *carry], band_id, band_hash) from a sigs column."""
     band_structs = F.array(*[
         F.struct(
             F.lit(b).alias("band_id"),
@@ -366,6 +230,40 @@ def _bands_from_sigs(sigged: DataFrame,
     return sigged.select(
         "doc_id", *carry, F.explode(band_structs).alias("band")
     ).select("doc_id", *carry, "band.band_id", "band.band_hash")
+
+
+def _band_pairs(base: DataFrame,
+                jaccard_floor: float | None = None) -> DataFrame:
+    """Distinct LSH candidate pairs (doc_a < doc_b) by the banded
+    self-join over *base* (_docs_sigged).
+
+    The band table is persisted with the set size carried as __n, in
+    ONE plan shape for every caller: the cache manager matches
+    persisted plans structurally, so a session running both
+    dedup_minhash_lsh and dedup_lsh_verified fills one band cache, and
+    the self-join does not deserialize the fat base cache (shingle
+    arrays) once per side.  *jaccard_floor* adds
+    min(n)/max(n) >= floor to the join: |∩| <= min and |∪| >= max, so
+    that ratio bounds Jaccard from above and no pair at or above the
+    floor is dropped."""
+    bands = _bands_from_sigs(base.withColumnRenamed("n", "__n"),
+                             carry=("__n",)).persist(_SHINGLE_CACHE_LEVEL)
+    a = bands.alias("a")
+    b = bands.alias("b")
+    cond = ((F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")))
+    if jaccard_floor is not None:
+        cond = cond & (
+            F.least(F.col("a.__n"), F.col("b.__n")).cast("double")
+            / F.greatest(F.col("a.__n"), F.col("b.__n")).cast("double")
+            >= jaccard_floor)
+    return (
+        a.join(b, cond)
+        .select(F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
 
 
 @register(
@@ -396,81 +294,7 @@ FROM bands a JOIN bands b
     bench=True,
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused path: one Arrow crossing for shingles+sigs.  Deliberately
-    # the SAME (doc_id, sigs, n, sh) base plan dedup_lsh_verified
-    # persists — Spark's cache manager matches cached plans by
-    # structure, so when both queries run in one session (the bench,
-    # dedup_components, dedup_multimodal) the corpus pass runs once
-    # and this query reads the cache.
-    base = _docs_sigged(spark, sf_dir, with_sets=True) \
-        .persist(_SHINGLE_CACHE_LEVEL)
-    # band table persisted with the SAME plan shape dedup_lsh_verified
-    # caches (set size carried as __n, unused here): the cache manager
-    # matches persisted plans structurally, so a session running both
-    # queries fills ONE band cache instead of two — the carried int is
-    # noise when this query runs alone.
-    bands = _bands_from_sigs(base.withColumnRenamed("n", "__n"),
-                             carry=("__n",)).persist(_SHINGLE_CACHE_LEVEL)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
-def _band_table(shingled: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-    """(doc_id, band_id, band_hash[, *carry]) LSH band table from
-    shingles.  *carry* names extra input columns to pass through
-    unchanged (dedup_lsh_verified rides its set-size bound on them)."""
-    hashed = shingled.withColumn(
-        "__sigs", _sig_udf()(F.col("shingles"))
-    )
-    sig = hashed.select(
-        "doc_id",
-        *carry,
-        *[F.element_at(F.col("__sigs"), j + 1).alias(f"mh_{j}")
-          for j in range(MINHASH_K)],
-    )
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.md5(F.concat(*[F.col(f"mh_{b * LSH_ROWS + r}").cast("string")
-                             for r in range(LSH_ROWS)])).alias("band_hash"),
-        )
-        for b in range(LSH_BANDS)
-    ])
-    return sig.select(
-        "doc_id", *carry, F.explode(band_structs).alias("band")
-    ).select("doc_id", *carry, "band.band_id", "band.band_hash")
-
-
-def _lsh_candidates(shingled: DataFrame) -> DataFrame:
-    """Distinct LSH candidate pairs (doc_a < doc_b) via banded self-join."""
-    # persist: the self-join below would otherwise recompute the full
-    # signature lineage for BOTH join sides; DISK_ONLY like the shingle
-    # caches (the band table is O(rows x bands) — a memory cache of it
-    # at corpus scale competes with shuffle/execution memory).
-    bands = _band_table(shingled).persist(_SHINGLE_CACHE_LEVEL)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return _band_pairs(_docs_sigged(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -535,10 +359,8 @@ WHERE jac >= {JACCARD_THRESHOLD}
     bench=True,
 )
 def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # one cached shingling pass feeds BOTH the index build and the
-    # verify-side shingle sets (the pandas shingler is the dominant
-    # per-doc cost; without the cache it runs twice); DISK_ONLY so the
-    # full-table shingle arrays never occupy executor storage memory
+    # one cached fused pass (_docs_sigged) feeds BOTH the index build
+    # and the verify-side shingle sets.
     # Round-6 verify restructure (guide §2.3/§3: shuffle fewer bytes,
     # decide with small rows before attaching payloads).  Hot shingles
     # make LSH precision poor on this corpus (~110-doc band buckets →
@@ -551,38 +373,16 @@ def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     #     round-tripped the shingle arrays through a second Python
     #     stage for the signatures.
     #  2. the distinct-set SIZE rides the band table (one int), and the
-    #     self-join condition adds min(n)/max(n) >= T — a strict upper
-    #     bound on Jaccard (|∩| <= min, |∪| >= max), so no qualifying
-    #     pair can be dropped; division is correctly rounded and
-    #     monotone, hence jac >= T always implies the bound passes.
-    #     Candidates drop ~3x BEFORE the distinct.
+    #     self-join condition adds min(n)/max(n) >= T (_band_pairs'
+    #     jaccard_floor); division is correctly rounded and monotone,
+    #     hence jac >= T always implies the bound passes.  Candidates
+    #     drop ~3x BEFORE the distinct.
     #  3. the array attach uses SHUFFLE_HASH joins: the pair table
     #     streams against a per-partition hash of the sets — no sort of
     #     array-typed rows, and nothing corpus-sized is broadcast.
     # Measured at sf1.0: 11.6 s → ~4 s, byte-identical output.
-    base = _docs_sigged(spark, sf_dir, with_sets=True) \
-        .persist(_SHINGLE_CACHE_LEVEL)
-    # narrow band cache: the self-join would otherwise deserialize the
-    # fat base cache (shingle arrays) once per side just to re-derive
-    # the bands
-    bands = _bands_from_sigs(base.withColumnRenamed("n", "__n"),
-                             carry=("__n",)).persist(_SHINGLE_CACHE_LEVEL)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.least(F.col("a.__n"), F.col("b.__n")).cast("double")
-               / F.greatest(F.col("a.__n"), F.col("b.__n")).cast("double")
-               >= JACCARD_THRESHOLD),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    base = _docs_sigged(spark, sf_dir)
+    cand = _band_pairs(base, jaccard_floor=JACCARD_THRESHOLD)
     sets = base.select("doc_id", "sh")
     aa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     bb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
@@ -883,8 +683,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup_minhash_lsh: sh is already the distinct shingle set, and the
     # shared plan lets the cache manager serve the corpus pass from the
     # sibling queries' cache inside one session (the bench).
-    base = _docs_sigged(spark, sf_dir, with_sets=True) \
-        .persist(_SHINGLE_CACHE_LEVEL)
+    base = _docs_sigged(spark, sf_dir)
     # sh0 is NOT persisted: both of its consumers re-derive it with one
     # cheap explode over the cached base — a second DISK_ONLY fill of
     # the exploded 1-row-per-shingle table cost more than it saved
@@ -978,8 +777,7 @@ WHERE jac >= {JACCARD_THRESHOLD}
         f"Jaccard >= {JACCARD_THRESHOLD} verify on candidates only",
 )
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _docs_sigged(spark, sf_dir, with_sets=True) \
-        .persist(_SHINGLE_CACHE_LEVEL)
+    base = _docs_sigged(spark, sf_dir)
     is_batch = F.col("doc_id") % _INC_BATCH_MOD == 0
     bands = _bands_from_sigs(base)
 

@@ -9,7 +9,7 @@ from pyspark import StorageLevel
 
 from .q_sim import _cosine, _cosine_sql
 from .registry import register
-from .session import load
+from .session import load, load_spread
 
 
 # ---------------------------------------------------------------------------
@@ -474,10 +474,9 @@ def synth_allph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The synthetic ``(img_id, ph)`` corpus (Spark twin of
     ``_allph_cte_sql``): per-doc 60-bit md5 phash + 1-2-bit-flipped
     near-copies every ``_PH_COPY_EVERY`` ids."""
-    d = load(spark, sf_dir, "documents").select("doc_id")
-    # spread the doc_id-only rows: the single-row-group scan otherwise
-    # runs the md5 phash derivation on one partition (round 6)
-    d = d.repartition(spark.sparkContext.defaultParallelism)
+    # spread: the single-row-group scan otherwise runs the md5 phash
+    # derivation on one partition (round 6)
+    d = load_spread(spark, sf_dir, "documents").select("doc_id")
     base = d.select(
         F.col("doc_id").alias("img_id"),
         F.conv(

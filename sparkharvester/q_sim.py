@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import REGISTRY, register
-from .session import load
+from .session import load, spread
 
 DIM = 64
 TOP_K = 20
@@ -73,7 +73,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = F.lit([float(x) for x in pivot["embedding"]])
     # single-row-group scan → spread before the per-element cosine fold
     # (interpreted HOF lambdas; one partition ran the whole corpus)
-    emb = emb.repartition(spark.sparkContext.defaultParallelism)
+    emb = spread(emb)
     return (
         emb.filter(F.col("vec_id") != int(pivot["vec_id"]))
         .select(

@@ -28,18 +28,8 @@ PUNCT_CLASS = r"[.,;:!?'\"()\[\]{}\-]"
 # ---------------------------------------------------------------------------
 
 
-def _padded_lower(text: F.Column) -> F.Column:
-    return F.concat(F.lit(" "), F.lower(text), F.lit(" "))
-
-
 def _padded_lower_sql(text: str) -> str:
     return f"' ' || lower({text}) || ' '"
-
-
-def _count_sub(hay: F.Column, needle: str) -> F.Column:
-    return (
-        (F.length(hay) - F.length(F.replace(hay, F.lit(needle)))) / F.lit(len(needle))
-    ).cast("int")
 
 
 def _count_sub_sql(hay: str, needle: str) -> str:
@@ -49,31 +39,6 @@ def _count_sub_sql(hay: str, needle: str) -> str:
     )
 
 
-def _fold_count_subs(tl: F.Column, needles: list[str]) -> F.Column:
-    """Sum of non-overlapping substring counts as a FOLD over an array
-    literal of needles, not a flat sum of per-needle sub-expressions.
-
-    The flat form re-expands `tl` (concat+lower) twice per needle; once
-    several such chains collapse into one projected Filter (the curate
-    pipeline composes lang + quality + gates), Janino's 64 KB method
-    limit trips and the whole stage silently falls back to interpreted
-    mode (same failure class intel.category_hits documents).  The fold
-    keeps the expression tree needle-count-independent; per-needle
-    arithmetic and summation order are identical (integer adds in
-    needle order), so oracle parity is unchanged."""
-    return F.aggregate(
-        F.lit(needles),
-        F.lit(0),
-        lambda acc, w: acc
-        + ((F.length(tl) - F.length(F.replace(tl, w))) / F.length(w))
-        .cast("int"),
-    )
-
-
-def _lang_score(tl: F.Column, lang: str) -> F.Column:
-    return _fold_count_subs(tl, list(LANG_STOPWORDS[lang]))
-
-
 def _lang_score_sql(tl: str, lang: str) -> str:
     return " + ".join(_count_sub_sql(tl, w) for w in LANG_STOPWORDS[lang])
 
@@ -81,13 +46,13 @@ def _lang_score_sql(tl: str, lang: str) -> str:
 # ---------------------------------------------------------------------------
 # fused language/quality scoring — ONE Arrow pass for the 32 language-
 # stopword counts, the 18 quality-stopword counts and the whitespace
-# token count (round 6; guide §4.2).  The JVM fold form evaluated its
-# lambda per needle with two full passes over the padded text each
-# (length + replace), all interpreted; Python's C-level str.count on
-# the same padded-lower text computes the identical non-overlapping
-# counts ((len(t) - len(t.replace(n, ''))) / len(n) == t.count(n)), and
-# integer sums are order-independent, so parity with the fold (and the
-# DuckDB oracle) is exact.  The word count is max(#\S+ runs, 1) on the
+# token count (round 6; guide §4.2).  The JVM fold form it replaced
+# evaluated its lambda per needle with two full passes over the padded
+# text each (length + replace), all interpreted; Python's C-level
+# str.count on the same padded-lower text computes the identical
+# non-overlapping counts ((len(t) - len(t.replace(n, ''))) / len(n) ==
+# t.count(n)), and integer sums are order-independent, so parity with
+# the DuckDB oracle's replace/length form (_count_sub_sql) is exact.  The word count is max(#\S+ runs, 1) on the
 # RAW text, same as intel._hits_udf.  Nondeterministic ON PURPOSE: the
 # curation pipeline filters on these outputs and a deterministic UDF
 # would be duplicated around the pushed-down filter (guide §4.4).
@@ -461,7 +426,7 @@ def curate_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 # runs in ONE vectorized pandas UDF pass (Counter per doc) because the
 # JVM higher-order-function alternative evaluates its lambda
 # interpreted per element (~20 µs/elem — same measurement as
-# q_dedup._shingles_udf's rationale).
+# q_dedup._fused_sig_udf's rationale).
 # ---------------------------------------------------------------------------
 
 REP_N = 2              # word n-gram order for the repetition scores

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from .enrich import synth_url_spark, synth_url_sql
 from .registry import register
-from .session import load
+from .session import load_spread
 from .urlnorm import (
     canonicalize_expr,
     canonicalize_sql,
@@ -30,13 +30,10 @@ _URLS_SQL = f"(SELECT doc_id, {synth_url_sql()} AS url FROM documents)"
 
 
 def _urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the driver tables are single-row-group parquet files, so the scan
-    # is ONE partition — spread the (doc_id-only) rows before the regex
-    # canonicalization pipeline runs, or it executes single-core
-    # (round 6; same rationale as session.load_spread, but only doc_id
-    # crosses the exchange here)
-    d = load(spark, sf_dir, "documents").select("doc_id")
-    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism)
+    # spread before the regex canonicalization pipeline, or it runs
+    # single-core (round 6); column pruning puts the doc_id projection
+    # below the exchange, so only doc_id crosses it
+    d = load_spread(spark, sf_dir, "documents").select("doc_id")
     return d.select("doc_id", synth_url_spark(F.col("doc_id")).alias("url"))
 
 

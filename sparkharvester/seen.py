@@ -25,7 +25,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -366,16 +366,3 @@ def anti_join_with_probe(
     checked = maybe.join(seen, keys, "left_anti")
     return unseen_fast.unionByName(checked)
 
-
-def anti_join_with_bloom(
-    frontier: DataFrame,
-    seen: DataFrame,
-    keys: list[str],
-    bloom: BloomFilter | None,
-    probe_col: str,
-) -> DataFrame:
-    """Back-compat wrapper: bloom-prefiltered exact anti-join."""
-    if bloom is None:
-        return frontier.join(seen, keys, "left_anti")
-    probe = bloom_probe_udf(frontier.sparkSession, bloom)
-    return anti_join_with_probe(frontier, seen, keys, probe, probe_col)

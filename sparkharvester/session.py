@@ -97,7 +97,12 @@ def load(spark: SparkSession, sf_dir: str, name: str):
 
 
 def load_spread(spark: SparkSession, sf_dir: str, name: str):
-    """load() + repartition to the session's parallelism.
+    """spread(load())."""
+    return spread(load(spark, sf_dir, name))
+
+
+def spread(df):
+    """Repartition *df* round-robin to the session's parallelism.
 
     The driver testdata tables are SINGLE parquet files with one row
     group, so Spark scans them as ONE partition — every downstream
@@ -107,5 +112,4 @@ def load_spread(spark: SparkSession, sf_dir: str, name: str):
     100 TB this is a no-op concern: real tables have thousands of
     splits, and this repartition would simply be omitted (or bounded
     by `spark.sql.files.maxPartitionBytes`)."""
-    df = load(spark, sf_dir, name)
-    return df.repartition(spark.sparkContext.defaultParallelism)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

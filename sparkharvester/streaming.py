@@ -290,11 +290,11 @@ def stream_lsh_candidates(
 ):
     """Streaming near-dup CANDIDATE detection: the MinHash-LSH index as
     a CONTINUOUS operator.  A stream of ``(doc_id, text)`` arrivals is
-    shingled → minhashed → banded batch-side (the same vectorized UDF
-    pipeline as q_dedup), then ``applyInPandasWithState`` keyed by
-    ``(band_id, band_hash)`` emits, for every arriving doc, a candidate
-    pair against each doc previously seen in that bucket (including
-    earlier docs of the same micro-batch, in doc_id order) — the
+    shingled → minhashed → banded batch-side by the batch queries' own
+    q_dedup._sigged + _bands_from_sigs, then ``applyInPandasWithState``
+    keyed by ``(band_id, band_hash)`` emits, for every arriving doc, a
+    candidate pair against each doc previously seen in that bucket
+    (including earlier docs of the same micro-batch, in doc_id order) — the
     streaming analog of ``dedup_incremental``'s candidate stage, with
     the state store playing the corpus index.  Exact-Jaccard verify
     stays a downstream batch step, as in the batch pipeline.
@@ -309,7 +309,7 @@ def stream_lsh_candidates(
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from .q_dedup import _band_table, _shingles_udf
+    from .q_dedup import _bands_from_sigs, _sigged
 
     schema = spark.read.parquet(docs_dir).schema
 
@@ -343,11 +343,8 @@ def stream_lsh_candidates(
         .option("maxFilesPerTrigger", "1")
         .parquet(docs_dir)
         .select("doc_id", "text")
-        .withColumn("shingles", _shingles_udf()(F.col("text")))
-        .filter(F.size("shingles") > 0)
-        .select("doc_id", "shingles")
     )
-    bands = _band_table(stream)
+    bands = _bands_from_sigs(_sigged(stream))
     paired = bands.groupBy("band_id", "band_hash").applyInPandasWithState(
         emit,
         outputStructType="doc_a long, doc_b long",

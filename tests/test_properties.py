@@ -129,3 +129,55 @@ def test_attestation_slate_invariants():
     window = set(qs[:ATTEST_WINDOW])
     assert set(ATTEST_FIRST) <= window
     assert len(qs) == len(set(qs))
+
+
+def _hex_minhash(text: str):
+    """MinHash signature the DuckDB oracle's way: md5 hexdigest slices
+    (_H1_SQL/_H2_SQL) and min(h1 + j*h2) over the RAW shingle list,
+    duplicates included; None for a doc with no shingle."""
+    import hashlib
+    import re
+
+    from sparkharvester.q_dedup import _TOKEN_RE, MINHASH_K
+
+    toks = re.findall(_TOKEN_RE, text.lower())
+    raw = [" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)]
+    if not raw:
+        return None
+    hx = [hashlib.md5(s.encode()).hexdigest() for s in raw]
+    h1 = [int(h[0:15], 16) for h in hx]
+    h2 = [int(h[16:30], 16) | 1 for h in hx]
+    return [min(a + j * b for a, b in zip(h1, h2)) for j in range(MINHASH_K)]
+
+
+@given(st.binary(max_size=64))
+@settings(max_examples=300, deadline=None)
+def test_md5_digest_slices_equal_hexdigest_slices(data):
+    """The fused signature UDF slices md5 digest bytes where the oracle
+    slices hex digits; both must name the same bits."""
+    import hashlib
+
+    m = hashlib.md5(data)
+    d, h = m.digest(), m.hexdigest()
+    assert int.from_bytes(d[0:8], "big") >> 4 == int(h[0:15], 16)
+    assert int.from_bytes(d[8:15], "big") == int(h[16:30], 16)
+
+
+def test_fused_sigs_equal_hexdigest_minhash(spark, sf_dir):
+    """_fused_sig_udf's sigs (digest bytes, distinct shingle set) equal
+    the oracle's arithmetic (hex digits, raw shingle list) for sf0.001
+    docs and a doc whose shingles repeat; sh is the distinct set and n
+    its size."""
+    from sparkharvester.q_dedup import _sigged
+
+    pdf = pd.read_parquet(f"{sf_dir}/documents.parquet",
+                          columns=["doc_id", "text"]).head(40)
+    pdf = pd.concat([pdf, pd.DataFrame(
+        {"doc_id": [-1, -2], "text": ["a b c a b c a b c d", "too short"]})])
+    rows = _sigged(spark.createDataFrame(pdf)).collect()
+    expect = {d: _hex_minhash(t) for d, t in zip(pdf.doc_id, pdf.text)
+              if _hex_minhash(t) is not None}
+    assert -1 in expect and -2 not in expect
+    assert {r.doc_id: r.sigs for r in rows} == expect
+    assert all(r.n == len(r.sh) == len(set(r.sh)) for r in rows)
+    assert {r.doc_id: r.n for r in rows}[-1] == 4

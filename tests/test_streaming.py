@@ -170,6 +170,21 @@ def test_stream_image_dedup_matches_batch(spark, tmp_path):
     assert admitted == expected
 
 
+def _oracle_lsh_pairs(sf_dir: str) -> set:
+    """dedup_minhash_lsh's DuckDB oracle over *sf_dir*'s documents: the
+    batch self-join's candidate pairs, computed apart from the Spark
+    signature UDF that the streaming query shares with the batch one."""
+    import duckdb
+
+    from sparkharvester.registry import all_queries
+
+    con = duckdb.connect()
+    con.sql("CREATE VIEW documents AS "
+            f"SELECT * FROM '{sf_dir}/documents.parquet'")
+    rows = con.sql(all_queries()["dedup_minhash_lsh"].oracle_sql()).fetchall()
+    return {(int(a), int(b)) for a, b in rows}
+
+
 def test_stream_lsh_candidates_match_batch_self_join(spark, tmp_path):
     """The streaming LSH index emits, over all micro-batches, exactly
     the batch self-join's candidate pair set."""
@@ -177,7 +192,6 @@ def test_stream_lsh_candidates_match_batch_self_join(spark, tmp_path):
 
     import pandas as pd
 
-    from sparkharvester.q_dedup import _docs_shingled, _lsh_candidates
     from sparkharvester.streaming import stream_lsh_candidates
 
     sf_dir = "/root/testdata/sf0.001"
@@ -194,8 +208,7 @@ def test_stream_lsh_candidates_match_batch_self_join(spark, tmp_path):
     q = stream_lsh_candidates(spark, str(d), str(tmp_path / "ckpt"))
     q.awaitTermination(300)
     streamed = {(r["doc_a"], r["doc_b"]) for r in q.collected}
-    batch = {(r.doc_a, r.doc_b) for r in
-             _lsh_candidates(_docs_shingled(spark, sf_dir)).collect()}
+    batch = _oracle_lsh_pairs(sf_dir)
     assert batch, "the corpus must contain LSH candidates"
     assert streamed == batch
 
@@ -208,7 +221,6 @@ def test_stream_lsh_candidates_restart_recovers_state(spark, tmp_path):
 
     import pandas as pd
 
-    from sparkharvester.q_dedup import _docs_shingled, _lsh_candidates
     from sparkharvester.streaming import stream_lsh_candidates
 
     sf_dir = "/root/testdata/sf0.001"
@@ -230,9 +242,7 @@ def test_stream_lsh_candidates_restart_recovers_state(spark, tmp_path):
     second = {(r["doc_a"], r["doc_b"]) for r in q2.collected}
 
     assert not (first & second), "restart must not re-emit prior pairs"
-    batch = {(r.doc_a, r.doc_b) for r in
-             _lsh_candidates(_docs_shingled(spark, sf_dir)).collect()}
-    assert first | second == batch
+    assert first | second == _oracle_lsh_pairs(sf_dir)
 
 
 def test_stream_crawl_rounds_restart_bitexact(spark, tmp_path):
