@@ -34,8 +34,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--crawl-delay", type=float, default=None)
     p.add_argument("--seed", type=int, default=None)
     p.add_argument("--bloom", action="store_const", const=True, default=None)
-    p.add_argument("--cuckoo", action="store_const", const=True, default=None,
-                   help="cuckoo-filter seen prefilter (delete-capable)")
     p.add_argument("--host-tokens", type=int, default=None)
     p.add_argument("--max-retries", type=int, default=None,
                    help="re-enqueue failed fetches up to N times with "
@@ -121,7 +119,6 @@ def main(argv: list[str] | None = None) -> int:
         "crawler.max_pages": args.max_pages,
         "crawler.crawl_delay": args.crawl_delay,
         "crawler.use_bloom": args.bloom,
-        "crawler.use_cuckoo": args.cuckoo,
         "crawler.host_tokens_per_round": args.host_tokens,
         "crawler.max_retries": args.max_retries,
         "storage.output_dir": args.out,

@@ -60,8 +60,6 @@ from .seen import (
     anti_join_with_probe,
     bloom_probe_udf,
     build_bloom,
-    build_cuckoo,
-    cuckoo_probe_udf,
     load_sketch,
     save_sketch,
 )
@@ -88,7 +86,6 @@ class CrawlConfig:
     crawl_delay: float = DEFAULT_CRAWL_DELAY
     blacklist: list[str] = dc_field(default_factory=lambda: list(DEFAULT_BLACKLIST_PATHS))
     use_bloom: bool = False
-    use_cuckoo: bool = False   # cuckoo-filter prefilter (supports delete)
     bloom_fpp: float = 0.01
     host_tokens_per_round: int | None = None   # None = politeness parity mode
     max_retries: int = 0   # >0: failed fetches re-enqueue with not_before
@@ -112,12 +109,6 @@ class CrawlConfig:
     # (bit-stable with earlier rounds), True = RFC 9309 mixed
     # Allow/Disallow wildcard rule sets (synth.robots_rules_for_host)
     rfc_robots: bool = False
-    # 10^10-scale option: per-seed cap/pop windows via range-partitioned
-    # prefix sums (seq.attach_grouped_prefix) instead of one window task
-    # per seed — identical results (pytest-asserted); default off because
-    # the extra checkpoint+stats job per round only pays when a single
-    # seed's round candidates outgrow one task (cf. the bloom toggle)
-    scalable_cap_window: bool = False
 
 
 @dataclass
@@ -179,6 +170,20 @@ FRONTIER_SCHEMA = ("seed_id int, canon_url string, depth int, "
 
 def _empty_frontier(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], FRONTIER_SCHEMA)
+
+
+def _with_probe_key(df: DataFrame) -> DataFrame:
+    """Add the seen-sketch key ``"{seed_id}|{canon_url}"``."""
+    return df.withColumn("probe_key", F.concat(
+        F.col("seed_id").cast("string"), F.lit("|"), F.col("canon_url")))
+
+
+def _full_sketch(keyed: DataFrame, n_seen: int, fpp: float):
+    """Bloom over *keyed* sized with 4x headroom over *n_seen* keys, so
+    a rebuild for outgrown geometry stays rare; ``(sketch, capacity)``."""
+    capacity = max(4 * n_seen, 1024)
+    return build_bloom(keyed, "probe_key", expected_items=capacity,
+                       fpp=fpp), capacity
 
 
 def admit_per_host(
@@ -273,17 +278,17 @@ def run_crawl(
                                  manifest["round"])
         seen_hashes = store.read_deltas(spark, "seen_hashes", HASHES_SCHEMA,
                                         manifest["round"])
-        # running seen-set size, carried in the manifest so bloom/cuckoo
+        # running seen-set size, carried in the manifest so bloom
         # sizing never needs a per-round full scan (VERDICT r2 #7);
         # one count() fallback for snapshots written before this field
         seen_total = manifest.get("seen_total")
         if seen_total is None:
             seen_total = seen.count()
         # incremental seen-sketch (round 6): resume the merged sketch
-        # from its sidecar; absent/corrupt ⇒ None and the first probing
-        # round rebuilds from the full seen table (back-compat)
+        # from its sidecar; absent/corrupt/not a bloom ⇒ None and the
+        # first probing round rebuilds from the full seen table
         loaded = load_sketch(root, manifest["round"]) \
-            if (cfg.use_bloom or cfg.use_cuckoo) else None
+            if cfg.use_bloom else None
         sketch, sketch_capacity = loaded if loaded else (None, 0)
     else:
         start_round = 0
@@ -334,7 +339,9 @@ def run_crawl(
                                    & (F.col("not_before") <= round_no))
         else:
             live = frontier.filter(eligible_now)
-        head = live.agg(F.min("depth").alias("d")).collect()[0]["d"]
+        # n_live bounds the rows reaching the cap window below, which
+        # picks its window or range path from it — same job as the head
+        head, n_live = live.agg(F.min("depth"), F.count("*")).collect()[0]
         if head is None:
             if (cfg.max_retries > 0
                     and frontier.filter(eligible_now).limit(1).count() > 0):
@@ -359,48 +366,28 @@ def run_crawl(
             .select("seed_id", "canon_url", "depth", "retry_no")
         )
 
-        # visited gate: bloom/cuckoo prefilter (optional) + exact
-        # anti-join (D2/F6) — both filters are definitely-unseen fast
-        # paths only, so the result equals the plain anti-join.
+        # visited gate: bloom prefilter (optional) + exact anti-join
+        # (D2/F6) — the bloom is a definitely-unseen fast path only, so
+        # the result equals the plain anti-join.
         # INCREMENTAL sketch maintenance (round 6, VERDICT r5 perf-weak
         # #1): the sketch is carried across rounds and only the round's
         # seen DELTA is merged in at commit time (below) — a full
         # O(|seen|) rebuild happens only when the sketch is missing
-        # (fresh start, pre-sidecar resume) or the seen set outgrew its
-        # geometry, which the 4x headroom makes geometrically rare
-        # (amortized O(1) sketch work per URL ever seen).  The sketch
+        # (fresh start, a resume without a bloom sidecar) or the seen set
+        # outgrew its geometry, which the 4x headroom makes geometrically
+        # rare (amortized O(1) sketch work per URL ever seen).  The sketch
         # only ever gains keys, so the no-false-negatives contract is
         # untouched; capacity overrun merely raises the false-positive
         # rate until the next rebuild (join traffic, never correctness).
-        probe = None
-        if cfg.use_bloom or cfg.use_cuckoo:
-            seen_keyed = seen.withColumn(
-                "probe_key", F.concat(F.col("seed_id").cast("string"),
-                                      F.lit("|"), F.col("canon_url"))
-            )
-            # exact running count maintained driver-side (deltas are
-            # disjoint by construction) — no per-round seen.count() scan
-            n_seen = seen_total
-            if n_seen > 0:
-                if sketch is None or n_seen > sketch_capacity:
-                    sketch_capacity = max(4 * n_seen, 1024)
-                    if cfg.use_cuckoo:
-                        sketch = build_cuckoo(seen_keyed, "probe_key",
-                                              expected_items=sketch_capacity)
-                    else:
-                        sketch = build_bloom(seen_keyed, "probe_key",
-                                             expected_items=sketch_capacity,
-                                             fpp=cfg.bloom_fpp)
-                probe = (cuckoo_probe_udf(spark, sketch) if cfg.use_cuckoo
-                         else bloom_probe_udf(spark, sketch))
-        if probe is not None:
-            cand = cand.withColumn(
-                "probe_key", F.concat(F.col("seed_id").cast("string"),
-                                      F.lit("|"), F.col("canon_url"))
-            )
+        # seen_total is the exact running count kept driver-side (deltas
+        # are disjoint by construction) — no per-round seen.count() scan.
+        if cfg.use_bloom and seen_total > 0:
+            if sketch is None or seen_total > sketch_capacity:
+                sketch, sketch_capacity = _full_sketch(
+                    _with_probe_key(seen), seen_total, cfg.bloom_fpp)
             cand = anti_join_with_probe(
-                cand, seen_keyed.select("seed_id", "canon_url"),
-                ["seed_id", "canon_url"], probe, "probe_key",
+                _with_probe_key(cand), seen, ["seed_id", "canon_url"],
+                bloom_probe_udf(spark, sketch), "probe_key",
             ).drop("probe_key")
         else:
             cand = cand.join(seen, ["seed_id", "canon_url"], "left_anti")
@@ -573,24 +560,12 @@ def run_crawl(
         success = eligible & ~F.col("is_dup")
         fetched = fetched.join(cap_df, "seed_id") \
                          .withColumn("__succ", success.cast("int"))
-        if cfg.scalable_cap_window:
-            # two-phase exact prefix sum: no single task ever sorts a
-            # whole seed's round candidates (VERDICT r2 scale audit)
-            fetched = attach_grouped_prefix(
-                fetched, "seed_id", ["canon_url"], "__succ",
-                "__cum_before", "pop_idx",
-            )
-        else:
-            w_seed = Window.partitionBy("seed_id").orderBy("canon_url")
-            fetched = fetched.withColumn(
-                "__cum_before",
-                F.coalesce(
-                    F.sum("__succ").over(
-                        w_seed.rowsBetween(Window.unboundedPreceding, -1)
-                    ),
-                    F.lit(0),
-                ),
-            ).withColumn("pop_idx", F.row_number().over(w_seed))
+        # exact per-seed prefix sum; above SEQ_WINDOW_THRESHOLD rows the
+        # range path keeps any one task from sorting a whole seed's round
+        fetched = attach_grouped_prefix(
+            fetched, "seed_id", ["canon_url"], "__succ",
+            "__cum_before", "pop_idx", known_count=n_live,
+        )
         fetched = fetched.withColumn(
             "popped", F.col("__cum_before") < F.col("cap_left"))
         fetched = fetched.cache()
@@ -725,28 +700,15 @@ def run_crawl(
         # the sidecar so exact resume restores it.  First probing
         # round (or a fresh geometry) builds from the delta, which IS
         # the full seen set then.
-        if cfg.use_bloom or cfg.use_cuckoo:
-            # coalesce: every partition ships a FULL-geometry bit/bucket
-            # array through treeAggregate, so for a round-sized delta
-            # the array traffic (not the adds) dominates — 4 partitions
+        if cfg.use_bloom:
+            # coalesce: every partition ships a FULL-geometry bit array
+            # through treeAggregate, so for a round-sized delta the
+            # array traffic (not the adds) dominates — 4 partitions
             # bound it at 4x one sketch while keeping the adds parallel
-            delta_keyed = seen_commit.withColumn(
-                "probe_key", F.concat(F.col("seed_id").cast("string"),
-                                      F.lit("|"), F.col("canon_url"))) \
-                .coalesce(4)
+            delta_keyed = _with_probe_key(seen_commit).coalesce(4)
             if sketch is None:
-                sketch_capacity = max(4 * max(seen_total, 1), 1024)
-                if cfg.use_cuckoo:
-                    sketch = build_cuckoo(delta_keyed, "probe_key",
-                                          expected_items=sketch_capacity)
-                else:
-                    sketch = build_bloom(delta_keyed, "probe_key",
-                                         expected_items=sketch_capacity,
-                                         fpp=cfg.bloom_fpp)
-            elif cfg.use_cuckoo:
-                sketch = sketch.merge(build_cuckoo(
-                    delta_keyed, "probe_key", expected_items=1,
-                    n_buckets=sketch.n_buckets))
+                sketch, sketch_capacity = _full_sketch(
+                    delta_keyed, seen_total, cfg.bloom_fpp)
             else:
                 sketch = sketch.merge(build_bloom(
                     delta_keyed, "probe_key", expected_items=1,

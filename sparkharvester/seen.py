@@ -12,7 +12,8 @@ EXACTNESS CONTRACT (SURVEY.md §7.4.3): the bloom is only a
 still go through the exact anti-join; rows it calls "unseen" are
 provably unseen (no false negatives in bloom filters), so they can
 skip the join.  False positives only cost join input size, never
-correctness.
+correctness.  The crawl's seen set only ever grows, so a filter that
+can delete keys would buy nothing here.
 
 Reference analog: the in-memory ``crawled``/``_global_hashes`` Python
 sets (crawler.py:111,230) — which cap out at single-host RAM.
@@ -85,180 +86,6 @@ class BloomFilter:
         return self
 
 
-class CuckooFilter:
-    """Bucketized cuckoo filter: 4-slot buckets, 16-bit fingerprints.
-
-    Same definitely-unseen contract as the bloom (no false negatives
-    while ``overflow`` is False), plus DELETE — which a bloom cannot do
-    — so a re-enqueued URL can be *unseen* again without rebuilding.
-    On insert failure (eviction cycle at high load) the filter sets
-    ``overflow`` and reports everything as maybe-seen: correctness
-    degrades to the exact anti-join, never to a wrong answer.
-
-    Lookup/delete are O(2 buckets); membership probes are fully
-    vectorized numpy.  Merging re-inserts the other table's
-    fingerprints (a stored fingerprint's bucket is always one of its
-    two valid homes, so locality survives the merge).
-    """
-
-    BUCKET = 4
-    MAX_KICKS = 500
-
-    def __init__(self, n_buckets: int, table: np.ndarray | None = None,
-                 overflow: bool = False):
-        self.n_buckets = n_buckets              # power of two
-        self.table = (table if table is not None
-                      else np.zeros((n_buckets, self.BUCKET), dtype=np.uint16))
-        self.overflow = overflow
-
-    @staticmethod
-    def params(expected_items: int, load: float = 0.84) -> int:
-        n = max(16, int(expected_items / (CuckooFilter.BUCKET * load)))
-        return 1 << (n - 1).bit_length()
-
-    def _fp_b1_b2(self, values: pd.Series):
-        h1, h2 = _hash2(values)
-        mask = np.uint64(self.n_buckets - 1)
-        fp = (h2 % np.uint64(65535)).astype(np.uint16) + np.uint16(1)  # nonzero
-        b1 = (h1 & mask).astype(np.int64)
-        # partial-key displacement: alt = b1 XOR hash(fp)
-        fph = (fp.astype(np.uint64) * np.uint64(0x5BD1E9955BD1E995))
-        b2 = ((b1.astype(np.uint64) ^ fph) & mask).astype(np.int64)
-        return fp, b1, b2
-
-    def _insert_one(self, fp: int, b1: int, b2: int) -> bool:
-        import random
-
-        for b in (b1, b2):
-            row = self.table[b]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        rng = random.Random(fp * 2654435761 + b1)   # deterministic kicks
-        b = rng.choice((b1, b2))
-        cur = fp
-        for _ in range(self.MAX_KICKS):
-            slot = rng.randrange(self.BUCKET)
-            cur, self.table[b, slot] = int(self.table[b, slot]), cur
-            # wraparound multiply done in Python ints (numpy warns on
-            # intentional uint64 overflow)
-            fph = (cur * 0x5BD1E9955BD1E995) & 0xFFFFFFFFFFFFFFFF
-            b = (b ^ fph) & (self.n_buckets - 1)
-            row = self.table[b]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = cur
-                return True
-        self.overflow = True
-        return False
-
-    def add_series(self, values: pd.Series) -> None:
-        fp, b1, b2 = self._fp_b1_b2(values)
-        for i in range(len(values)):
-            self._insert_one(int(fp[i]), int(b1[i]), int(b2[i]))
-
-    def contains_series(self, values: pd.Series) -> np.ndarray:
-        if self.overflow:
-            return np.ones(len(values), dtype=bool)    # degrade: all maybe
-        fp, b1, b2 = self._fp_b1_b2(values)
-        col = fp[:, None]
-        return ((self.table[b1] == col).any(axis=1)
-                | (self.table[b2] == col).any(axis=1))
-
-    def delete_series(self, values: pd.Series) -> np.ndarray:
-        """Remove one stored copy per present value; returns found-mask.
-
-        SAFETY CONTRACT (standard cuckoo-filter caveat, ADVICE r2):
-        delete is only safe for keys KNOWN to have been inserted.
-        Deleting a never-inserted key whose fingerprint collides with a
-        stored key's (in a shared bucket) silently removes the other
-        key's entry — reintroducing false negatives while ``overflow``
-        stays False, which breaks the no-false-negatives contract.
-        Callers must either track insertions (the crawl's re-enqueue
-        path deletes only keys it previously marked seen) or guard with
-        ``contains_series`` AND tolerate the collision case; when in
-        doubt, rebuild the filter instead of deleting.
-        """
-        fp, b1, b2 = self._fp_b1_b2(values)
-        out = np.zeros(len(values), dtype=bool)
-        for i in range(len(values)):
-            for b in (int(b1[i]), int(b2[i])):
-                row = self.table[b]
-                hit = np.nonzero(row == fp[i])[0]
-                if len(hit):
-                    row[hit[0]] = 0
-                    out[i] = True
-                    break
-        return out
-
-    def merge(self, other: "CuckooFilter") -> "CuckooFilter":
-        self.overflow = self.overflow or other.overflow
-        mask = np.uint64(self.n_buckets - 1)
-        bs, slots = np.nonzero(other.table)
-        for b, s in zip(bs.tolist(), slots.tolist()):
-            cur = int(other.table[b, s])
-            fph = (cur * 0x5BD1E9955BD1E995) & 0xFFFFFFFFFFFFFFFF
-            alt = (b ^ fph) & int(mask)
-            self._insert_one(cur, b, alt)
-        return self
-
-
-def build_cuckoo(df: DataFrame, col: str, expected_items: int,
-                 n_buckets: int | None = None) -> CuckooFilter:
-    """Per-partition cuckoo tables merged via treeAggregate (same shape
-    as build_bloom; the merge re-inserts fingerprints).
-
-    ``n_buckets`` overrides the sizing so a DELTA filter can be built
-    with the same geometry as an existing filter and merged into it
-    (incremental seen-sketch maintenance, round 6)."""
-    if n_buckets is None:
-        n_buckets = CuckooFilter.params(expected_items)
-
-    def part_filter(rows) -> Iterator[np.ndarray]:
-        cf = CuckooFilter(n_buckets)
-        vals = [r[0] for r in rows]
-        if vals:
-            cf.add_series(pd.Series(vals))
-        # overflow encoded in an extra trailing row flag
-        flag = np.full((1, CuckooFilter.BUCKET),
-                       1 if cf.overflow else 0, dtype=np.uint16)
-        yield np.vstack([cf.table, flag])
-
-    def comb(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-        if a is None or not a.size:
-            return b
-        if b is None or not b.size:
-            return a
-        ca = CuckooFilter(n_buckets, a[:-1].copy(), bool(a[-1, 0]))
-        cb = CuckooFilter(n_buckets, b[:-1], bool(b[-1, 0]))
-        ca.merge(cb)
-        flag = np.full((1, CuckooFilter.BUCKET),
-                       1 if ca.overflow else 0, dtype=np.uint16)
-        return np.vstack([ca.table, flag])
-
-    zero = np.zeros((0, CuckooFilter.BUCKET), dtype=np.uint16)
-    merged = (
-        df.select(col).rdd.mapPartitions(part_filter)
-        .treeAggregate(zero, comb, comb, depth=2)
-    )
-    if not merged.size:
-        return CuckooFilter(n_buckets)
-    return CuckooFilter(n_buckets, merged[:-1], bool(merged[-1, 0]))
-
-
-def cuckoo_probe_udf(spark, cf: CuckooFilter):
-    """Vectorized maybe-seen probe; broadcasts the fingerprint table."""
-    bc = spark.sparkContext.broadcast((cf.n_buckets, cf.table, cf.overflow))
-
-    def probe(values: pd.Series) -> pd.Series:
-        n_buckets, table, overflow = bc.value
-        f = CuckooFilter(n_buckets, table, overflow)
-        return pd.Series(f.contains_series(values), index=values.index)
-
-    return pandas_udf(probe, "boolean")
-
-
 def build_bloom(df: DataFrame, col: str, expected_items: int,
                 fpp: float = 0.01,
                 params: tuple[int, int] | None = None) -> BloomFilter:
@@ -303,11 +130,12 @@ def bloom_probe_udf(spark, bloom: BloomFilter):
 # persists its merged seen-sketch once per round and merges ONLY the
 # round's seen delta into it, instead of rebuilding from the full seen
 # table every round.  Exact resume loads the sidecar; a snapshot
-# without one (older runs) falls back to a full rebuild.
+# without a bloom sidecar (older runs) falls back to a full rebuild.
 # ---------------------------------------------------------------------------
 
 
-def save_sketch(root: str, round_no: int, sketch, capacity: int) -> str:
+def save_sketch(root: str, round_no: int, sketch: BloomFilter,
+                capacity: int) -> str:
     """Atomically write the sketch sidecar for *round_no*."""
     import os
 
@@ -315,22 +143,17 @@ def save_sketch(root: str, round_no: int, sketch, capacity: int) -> str:
     os.makedirs(d, exist_ok=True)
     final = os.path.join(d, f"r{round_no:06d}.npz")
     tmp = os.path.join(d, f".tmp-r{round_no:06d}-{os.getpid()}.npz")
-    if isinstance(sketch, BloomFilter):
-        np.savez(tmp, kind=np.array("bloom"), bits=sketch.bits,
-                 n_bits=np.array(sketch.n_bits), k=np.array(sketch.k),
-                 capacity=np.array(capacity))
-    else:
-        np.savez(tmp, kind=np.array("cuckoo"), table=sketch.table,
-                 n_buckets=np.array(sketch.n_buckets),
-                 overflow=np.array(1 if sketch.overflow else 0),
-                 capacity=np.array(capacity))
+    np.savez(tmp, kind=np.array("bloom"), bits=sketch.bits,
+             n_bits=np.array(sketch.n_bits), k=np.array(sketch.k),
+             capacity=np.array(capacity))
     os.replace(tmp, final)
     return final
 
 
 def load_sketch(root: str, round_no: int):
-    """Load the sidecar committed at *round_no*; ``None`` when absent
-    or unreadable (callers rebuild from the full seen table)."""
+    """Load the bloom sidecar committed at *round_no* as
+    ``(BloomFilter, capacity)``; ``None`` when absent, unreadable or of
+    another kind (callers rebuild from the full seen table)."""
     import os
 
     p = os.path.join(root, "sketch", f"r{round_no:06d}.npz")
@@ -338,12 +161,10 @@ def load_sketch(root: str, round_no: int):
         return None
     try:
         z = np.load(p)
-        cap = int(z["capacity"])
-        if str(z["kind"]) == "bloom":
-            return BloomFilter(int(z["n_bits"]), int(z["k"]),
-                               z["bits"].copy()), cap
-        return CuckooFilter(int(z["n_buckets"]), z["table"].copy(),
-                            bool(int(z["overflow"]))), cap
+        if str(z["kind"]) != "bloom":
+            return None
+        return BloomFilter(int(z["n_bits"]), int(z["k"]),
+                           z["bits"].copy()), int(z["capacity"])
     except Exception:  # noqa: BLE001 — any corrupt sidecar ⇒ full rebuild
         return None
 
@@ -355,7 +176,7 @@ def anti_join_with_probe(
     probe,
     probe_col: str,
 ) -> DataFrame:
-    """Exact anti-join with a maybe-seen prefilter UDF (bloom or cuckoo).
+    """Exact anti-join with a maybe-seen prefilter UDF (the bloom probe).
 
     definitely-unseen rows skip the shuffle join entirely; maybe-seen
     rows take the exact anti-join.  Result == plain anti-join.

@@ -63,6 +63,17 @@ def test_unknown_yaml_key_fails_loudly(tmp_path):
         load_config(str(y), env={})
 
 
+@pytest.mark.parametrize("key", ["use_cuckoo", "scalable_cap_window"])
+def test_removed_crawl_key_fails_loudly(tmp_path, key):
+    """Options that only chose between implementations with identical
+    crawls were removed; a config that still sets one must not be
+    silently accepted."""
+    y = tmp_path / "c.yaml"
+    y.write_text(f"crawler:\n  {key}: true\n")
+    with pytest.raises(KeyError, match=key):
+        load_config(str(y), env={})
+
+
 def test_unknown_flag_override_rejected():
     with pytest.raises(KeyError, match="crawler.nope"):
         load_config(env={}, flag_overrides={"crawler.nope": 1})

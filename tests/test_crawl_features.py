@@ -272,17 +272,36 @@ def test_grouped_prefix_matches_window(spark):
     assert dict(win.dtypes)["idx"] == "bigint"
 
 
-def test_scalable_cap_window_crawl_identical(spark):
+def test_scalable_cap_window_crawl_identical(spark, monkeypatch):
     """The range-partitioned per-seed cap path produces the IDENTICAL
-    crawl (pages, seq, stats) as the window path — the 10^10-scale
-    option is a pure physical substitution."""
+    crawl (pages, seq, stats) as the window path — the path choice
+    from the round's live-row count is a pure physical substitution.
+    The range path is forced by dropping the window threshold to 0,
+    and the row counts the crawl hands the cap window are recorded to
+    show which path each round took."""
+    import sparkharvester.frontier as frontier
+    import sparkharvester.seq as seq
+
+    known_counts = []
+
+    def recording(*args, known_count=None, **kwargs):
+        known_counts.append(known_count)
+        return seq.attach_grouped_prefix(*args, known_count=known_count,
+                                         **kwargs)
+
+    monkeypatch.setattr(frontier, "attach_grouped_prefix", recording)
     synth = SynthConfig(n_hosts=3, pages_per_host=14)
     seeds = seed_urls(synth)
     base = run_crawl(spark, seeds, synth,
                      CrawlConfig(max_depth=2, max_pages=12))
+    assert known_counts
+    assert all(0 < n <= seq.SEQ_WINDOW_THRESHOLD for n in known_counts)
+    known_counts.clear()
+    monkeypatch.setattr(seq, "SEQ_WINDOW_THRESHOLD", 0)   # force range path
     scal = run_crawl(spark, seeds, synth,
-                     CrawlConfig(max_depth=2, max_pages=12,
-                                 scalable_cap_window=True))
+                     CrawlConfig(max_depth=2, max_pages=12))
+    assert known_counts
+    assert all(n > seq.SEQ_WINDOW_THRESHOLD for n in known_counts)
     key = lambda eng: {(r["seed_id"], r["url"], r["depth"], r["seq"],
                         r["crawled_at"])
                        for r in eng.pages.collect()}  # noqa: E731

@@ -41,79 +41,10 @@ def test_distributed_build_matches_local(spark):
     assert np.array_equal(bf.bits, local.bits)
 
 
-def test_cuckoo_crawl_is_exact(spark):
-    """Cuckoo prefilter run == exact anti-join run (SURVEY §7.4.3
-    contract extended to the cuckoo variant)."""
-    from sparkharvester.frontier import CrawlConfig, run_crawl
-    from sparkharvester.synth import SynthConfig, seed_urls
-
-    synth = SynthConfig(n_hosts=3, pages_per_host=15)
-    seeds = seed_urls(synth)
-    base = run_crawl(spark, seeds, synth, CrawlConfig(max_depth=2, max_pages=15))
-    cuckoo = run_crawl(spark, seeds, synth,
-                       CrawlConfig(max_depth=2, max_pages=15, use_cuckoo=True))
-    key = lambda eng: {(r["seed_id"], r["url"], r["depth"])
-                       for r in eng.pages.collect()}
-    assert key(base) == key(cuckoo)
-    assert base.stats == cuckoo.stats
-
-
-def test_cuckoo_filter_membership_and_delete():
-    import numpy as np
-    import pandas as pd
-
-    from sparkharvester.seen import CuckooFilter
-
-    keys = pd.Series([f"k-{i}" for i in range(2000)])
-    cf = CuckooFilter(CuckooFilter.params(2000))
-    cf.add_series(keys)
-    assert not cf.overflow
-    # no false negatives
-    assert cf.contains_series(keys).all()
-    # false-positive rate on disjoint keys is small (16-bit fingerprints)
-    other = pd.Series([f"x-{i}" for i in range(2000)])
-    fpr = cf.contains_series(other).mean()
-    assert fpr < 0.05, fpr
-    # delete: removed keys stop matching (unless a colliding fp remains)
-    victims = keys[:200]
-    assert cf.delete_series(victims).all()
-    assert cf.contains_series(victims).mean() < 0.05
-    # the rest are still all present
-    assert cf.contains_series(keys[200:]).all()
-
-
-def test_cuckoo_overflow_degrades_to_maybe():
-    import pandas as pd
-
-    from sparkharvester.seen import CuckooFilter
-
-    cf = CuckooFilter(16)     # tiny: 64 slots
-    cf.add_series(pd.Series([f"k-{i}" for i in range(200)]))
-    assert cf.overflow
-    # degraded filter claims maybe-seen for EVERYTHING: exactness of the
-    # downstream anti-join is preserved, only the fast path is lost
-    assert cf.contains_series(pd.Series(["never-inserted"])).all()
-
-
-def test_cuckoo_partitioned_build_merge(spark):
-    import pandas as pd
-
-    from sparkharvester.seen import build_cuckoo
-
-    df = spark.range(3000).selectExpr("concat('u-', id) AS k").repartition(8)
-    cf = build_cuckoo(df, "k", expected_items=3000)
-    assert not cf.overflow
-    keys = pd.Series([f"u-{i}" for i in range(3000)])
-    assert cf.contains_series(keys).all()      # merge kept every key
-
-
 def test_incremental_delta_merge_equals_full_build(spark):
     """Round-6 incremental sketch contract: OR-merging same-geometry
     DELTA sketches over a partition of the keys is bit-identical to one
-    full build (bloom adds are deterministic), and the cuckoo variant
-    answers membership identically for all inserted keys."""
-    from sparkharvester.seen import build_cuckoo
-
+    full build (bloom adds are deterministic)."""
     keys = [f"k{i}" for i in range(3000)]
     df_all = spark.createDataFrame([(k,) for k in keys], "k string")
     df_a = spark.createDataFrame([(k,) for k in keys[:1000]], "k string")
@@ -126,22 +57,18 @@ def test_incremental_delta_merge_equals_full_build(spark):
     assert (inc.n_bits, inc.k) == (full.n_bits, full.k)
     assert np.array_equal(inc.bits, full.bits)
 
-    cfull = build_cuckoo(df_all, "k", expected_items=4000)
-    cinc = build_cuckoo(df_a, "k", expected_items=4000)
-    cinc = cinc.merge(build_cuckoo(df_b, "k", expected_items=1,
-                                   n_buckets=cfull.n_buckets))
-    s = pd.Series(keys)
-    assert cinc.contains_series(s).all()
-    assert not cinc.overflow
-
 
 def test_bloom_crawl_incremental_and_resume_sidecar(spark, tmp_path):
     """Bloom run == exact run with the incremental per-round sketch,
     the sidecar lands in the snapshot each round, and a resumed crawl
-    (which loads the sidecar instead of rebuilding) stays bit-exact."""
+    stays bit-exact — both when it loads the sidecar as written and
+    when the sidecar is of another kind (an older cuckoo run), which
+    must take the full-rebuild path instead of reaching the probe."""
     import os
+    import shutil
 
     from sparkharvester.frontier import CrawlConfig, run_crawl
+    from sparkharvester.seen import load_sketch
     from sparkharvester.synth import SynthConfig, seed_urls
 
     synth = SynthConfig(n_hosts=3, pages_per_host=15)
@@ -163,9 +90,22 @@ def test_bloom_crawl_incremental_and_resume_sidecar(spark, tmp_path):
     run_crawl(spark, seeds, synth,
               CrawlConfig(max_depth=2, max_pages=15, use_bloom=True,
                           checkpoint_dir=ckpt, stop_after_round=0))
-    resumed = run_crawl(spark, seeds, synth,
-                        CrawlConfig(max_depth=2, max_pages=15,
-                                    use_bloom=True),
-                        resume_from=ckpt)
-    assert key(resumed) == key(base)
-    assert resumed.stats == base.stats
+    # the same snapshot with the sidecar an older cuckoo run wrote; its
+    # capacity covers the seen set, so only the kind can force a rebuild
+    _, capacity = load_sketch(ckpt, 0)
+    other_kind = str(tmp_path / "snap_cuckoo")
+    shutil.copytree(ckpt, other_kind)
+    np.savez(os.path.join(other_kind, "sketch", "r000000.npz"),
+             kind=np.array("cuckoo"),
+             table=np.zeros((256, 4), dtype=np.uint16),
+             n_buckets=np.array(256), overflow=np.array(0),
+             capacity=np.array(capacity))
+
+    for case, root in (("sidecar as written", ckpt),
+                       ("cuckoo sidecar", other_kind)):
+        resumed = run_crawl(spark, seeds, synth,
+                            CrawlConfig(max_depth=2, max_pages=15,
+                                        use_bloom=True),
+                            resume_from=root)
+        assert key(resumed) == key(base), case
+        assert resumed.stats == base.stats, case
