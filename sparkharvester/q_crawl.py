@@ -11,7 +11,7 @@ from .enrich import synth_url_spark, synth_url_sql
 from .frontier import CrawlConfig, admit_per_host, run_crawl
 from .images import check_invariants, make_images_df
 from .registry import register
-from .session import load, load_spread
+from .session import load, load_spread, row_count
 from .synth import SynthConfig, seed_urls
 from .urlnorm import (
     canonicalize_expr,
@@ -560,9 +560,10 @@ def img_dup_pixel_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 # admit_per_host (local row_number per (host, depth, salt) keeping ≤
 # TOKENS per bucket, then the exact window over ≤ TOKENS×BUCKETS
 # survivors — exact ranks for admitted rows, bounded task input under
-# hot-host skew), and the global pop_rank uses seq.attach_global_seq
-# (range-partitioned prefix sums), so no single task ever sorts the
-# whole queue.
+# hot-host skew), and the global pop_rank uses seq.attach_grouped_prefix
+# with no group, bounded by |admitted| <= |documents|: the plain window
+# below its threshold, range-partitioned prefix sums above it, so no
+# single task ever sorts a large queue.
 # ---------------------------------------------------------------------------
 
 _PQ_TOKENS = 8      # per-(host, depth) politeness budget
@@ -595,7 +596,7 @@ WHERE budget_pos <= {_PQ_TOKENS}
         "single-task sort)",
 )
 def crawl_priority_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .seq import attach_global_seq
+    from .seq import attach_grouped_prefix
 
     cand = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("url_id"),
@@ -619,8 +620,9 @@ def crawl_priority_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("budget_pos") <= _PQ_TOKENS)
         .drop("__s", "__lrn")
     )
-    popped = attach_global_seq(
-        admitted, ["depth", "budget_pos", "url_id"], out_col="pop_rank")
+    popped = attach_grouped_prefix(
+        admitted, None, ["depth", "budget_pos", "url_id"], "pop_rank",
+        known_count=row_count(sf_dir, "documents"))
     return popped.select("url_id", "host", "depth", "budget_pos", "pop_rank")
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .registry import register
-from .session import load
+from .session import load, row_count
 
 # ---------------------------------------------------------------------------
 # Deterministic images-metadata view (input_hint shape, minus bytes)
@@ -274,9 +274,10 @@ def img_hamming_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Image training-shard packing: assign curated images to ~fixed
 # PIXEL-budget shards by exclusive prefix sum over the canonical image
 # order — the image-axis analog of curate_shards (the tar/webdataset
-# manifest step of an image training build).  Same scalable machinery:
-# seq.attach_grouped_prefix (range partition + driver-side P-entry
-# offset table + one mapInPandas pass), never a global window.
+# manifest step of an image training build).  Same primitive:
+# seq.attach_grouped_prefix with no group (above its window threshold a
+# range partition + driver-side P-entry offset table + one mapInPandas
+# pass, never a global window).
 # ---------------------------------------------------------------------------
 
 SHARD_PIXELS = 2_000_000
@@ -312,13 +313,12 @@ def img_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     curated = img_curate(spark, sf_dir).select(
         "img_id", (F.col("w") * F.col("h")).cast("long").alias("n_pixels"))
-    g = curated.withColumn("__g", F.lit(0))
     out = attach_grouped_prefix(
-        g, "__g", ["img_id"],
-        succ_col="n_pixels", cum_col="cum_pixels", idx_col="__idx",
+        curated, None, ["img_id"], "__idx",
+        sum_col="n_pixels", cum_col="cum_pixels",
         # |curated images| <= |documents| (the synthetic image corpus is
-        # doc-derived): metadata-cheap bound for the adaptive window path
-        known_count=load(spark, sf_dir, "documents").count(),
+        # doc-derived): parquet-footer bound for the adaptive window path
+        known_count=row_count(sf_dir, "documents"),
     )
     return out.select(
         "img_id", "n_pixels", "cum_pixels",

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from .constants import LANG_ORDER, LANG_STOPWORDS, QUALITY_STOPWORDS
 from .registry import register
-from .session import load, load_spread
+from .session import load, load_spread, row_count
 from .sqlgen import sq
 
 # BPE-ish pre-tokenizer: letter runs, digit runs, or single non-space symbol
@@ -362,9 +362,10 @@ def curate_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shards by exclusive prefix sum over the canonical doc order — the
 # step after curation in a real training-data build (shard manifests
 # for the data loader).  The prefix sum uses seq.attach_grouped_prefix
-# (range partition + driver-side P-entry offset table + one mapInPandas
-# pass), NOT a global window — no single task ever holds the whole
-# curated set (the same machinery the crawl's per-seed cap runs on).
+# with no group: above its window threshold a range partition +
+# driver-side P-entry offset table + one mapInPandas pass, so no single
+# task ever holds the whole curated set (the same primitive the crawl's
+# per-seed cap and canonical seq run on).
 # ---------------------------------------------------------------------------
 
 SHARD_TOKENS = 2_000
@@ -402,13 +403,12 @@ def curate_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .seq import attach_grouped_prefix
 
     curated = curate_training_set(spark, sf_dir).select("doc_id", "n_tokens")
-    g = curated.withColumn("__g", F.lit(0))
     out = attach_grouped_prefix(
-        g, "__g", ["doc_id"],
-        succ_col="n_tokens", cum_col="cum_tokens", idx_col="__idx",
-        # |curated| <= |documents|: a metadata-cheap upper bound that
+        curated, None, ["doc_id"], "__idx",
+        sum_col="n_tokens", cum_col="cum_tokens",
+        # |curated| <= |documents|: a parquet-footer upper bound that
         # lets the scale-adaptive window path run below threshold
-        known_count=load(spark, sf_dir, "documents").count(),
+        known_count=row_count(sf_dir, "documents"),
     )
     return out.select(
         "doc_id", "n_tokens", "cum_tokens",
@@ -1127,12 +1127,13 @@ def curate_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bucket = floor(3*(rank-1)/n) over the (score, doc_id) order, so no
 # float-boundary tie can ever disagree between engines.
 #
-# Scale shape: the rank within each language is NOT a per-language
-# window (one task would sort half the corpus for the dominant
-# language) — it rides seq.attach_grouped_prefix: range-partition on
-# (lang, score, doc_id), per-(partition, lang) counts prefix-summed on
-# the driver, one mapInPandas numbering pass.  Language sizes are a
-# |langs|-row broadcast.
+# Scale shape: rank and language size come from one
+# seq.attach_grouped_prefix call.  Above its window threshold the rank
+# is NOT a per-language window (one task would sort half the corpus for
+# the dominant language): range-partition on (lang, score, doc_id),
+# per-(partition, lang) counts prefix-summed on the driver, one
+# mapInPandas numbering pass; language sizes are the driver's per-lang
+# totals, so no count job or join.
 # ---------------------------------------------------------------------------
 
 
@@ -1170,7 +1171,7 @@ FROM ranked
         "range-partitioned grouped prefix sums, no per-language window",
 )
 def text_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .seq import SEQ_WINDOW_THRESHOLD, attach_grouped_prefix
+    from .seq import attach_grouped_prefix
 
     df = _scored_frame(spark, sf_dir)
     scored = df.select(
@@ -1181,44 +1182,18 @@ def text_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("__n_tok").cast("double"), 6
         ).alias("score"),
     )
-    # scale-adaptive rank (the attach_global_seq device): below the
-    # window threshold the oracle's own two-window formulation — one
-    # lang_pred shuffle, no checkpoint machinery, no join — is cheaper;
-    # the parquet row count is a metadata-cheap upper bound.  Above it,
-    # the range-partitioned grouped prefix sum keeps per-task work
-    # bounded (no per-language window task at 10^10 docs).
-    n_docs = load(spark, sf_dir, "documents").count()
-    if n_docs <= SEQ_WINDOW_THRESHOLD:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("lang_pred")
-        ranked = scored.withColumn(
-            "lang_rank",
-            F.row_number().over(w.orderBy("score", "doc_id")).cast("long"),
-        ).withColumn("n_lang", F.count("*").over(w))
-        r, n = F.col("lang_rank"), F.col("n_lang")
-        return ranked.select(
-            "doc_id", "lang_pred", "score", "lang_rank", "n_lang",
-            F.when((r - 1) * 3 < n, F.lit("tail"))
-            .when((r - 1) * 3 < 2 * n, F.lit("middle"))
-            .otherwise(F.lit("head")).alias("bucket"),
-        )
+    # |scored| == |documents|: the parquet-footer count picks the
+    # primitive's path — the oracle's own window pair below threshold,
+    # the range-partitioned numbering with driver-side language sizes
+    # above it (no per-language window task at 10^10 docs)
     ranked = attach_grouped_prefix(
-        scored.withColumn("__zero", F.lit(0)),
-        "lang_pred", ["score", "doc_id"],
-        "__zero", "__cum", "lang_rank",
-    ).drop("__zero", "__cum")
-    # counts read the localCheckpoint attach_grouped_prefix already
-    # materialized (deriving them from `scored` would re-run the whole
-    # scan + langid/quality expression pipeline a second time)
-    counts = ranked.groupBy("lang_pred").agg(F.count("*").alias("n_lang"))
+        scored, "lang_pred", ["score", "doc_id"], "lang_rank",
+        count_col="n_lang", known_count=row_count(sf_dir, "documents"),
+    )
     r, n = F.col("lang_rank"), F.col("n_lang")
-    return (
-        ranked.join(F.broadcast(counts), "lang_pred")
-        .select(
-            "doc_id", "lang_pred", "score", "lang_rank", "n_lang",
-            F.when((r - 1) * 3 < n, F.lit("tail"))
-            .when((r - 1) * 3 < 2 * n, F.lit("middle"))
-            .otherwise(F.lit("head")).alias("bucket"),
-        )
+    return ranked.select(
+        "doc_id", "lang_pred", "score", "lang_rank", "n_lang",
+        F.when((r - 1) * 3 < n, F.lit("tail"))
+        .when((r - 1) * 3 < 2 * n, F.lit("middle"))
+        .otherwise(F.lit("head")).alias("bucket"),
     )

@@ -96,6 +96,14 @@ def load(spark: SparkSession, sf_dir: str, name: str):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def row_count(sf_dir: str, name: str) -> int:
+    """Row count of one driver-generated table from its parquet footers
+    — no Spark job, unlike ``load(...).count()``."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(f"{sf_dir}/{name}.parquet", format="parquet").count_rows()
+
+
 def load_spread(spark: SparkSession, sf_dir: str, name: str):
     """spread(load())."""
     return spread(load(spark, sf_dir, name))

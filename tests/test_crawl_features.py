@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkharvester.frontier import CrawlConfig, run_crawl
@@ -233,43 +234,89 @@ def test_two_phase_admission_exact_and_bounded(spark):
     assert max(r["count"] for r in survivors_per_host) > tokens  # >1 bucket
 
 
-def test_grouped_prefix_matches_window(spark):
-    """attach_grouped_prefix == the per-group cumulative-sum +
-    row_number window pair, on a skewed frame (one group owns 90% of
-    rows spread over many partitions)."""
+# (group, order, sum column, rows, schema, range-path partitions)
+_NUMBERING_CASES = {
+    "no_group": (
+        None, ["c", "b", "a"], "a",
+        [(i % 7, f"k{i % 13:02d}-{i:04d}", i % 3) for i in range(997)],
+        "a int, b string, c int", 11,
+    ),
+    # one group owns 90% of rows, spread over many partitions
+    "skewed_group": (
+        "g", ["k"], "succ",
+        [(0 if i % 10 else i % 7, f"k{i:05d}", i % 3) for i in range(5000)],
+        "g int, k string, succ int", 13,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_NUMBERING_CASES))
+@pytest.mark.parametrize("path", ["window", "range"])
+def test_grouped_prefix_matches_window(spark, path, case):
+    """attach_grouped_prefix == the per-group row_number, exclusive
+    cumulative-sum and count windows, types included, on both of its
+    paths: the window (known_count at or below the threshold) and the
+    range-partitioned numbering.  Arrow batches of 7 rows make every
+    range partition arrive as several batches, so each group's running
+    count and sum must carry from one batch to the next."""
     from pyspark.sql.window import Window
 
     from sparkharvester.seq import attach_grouped_prefix
 
-    rows = [(0 if i % 10 else i % 7, f"k{i:05d}", i % 3) for i in range(5000)]
-    df = spark.createDataFrame(rows, "g int, k string, succ int") \
-              .repartition(16)
-    w = Window.partitionBy("g").orderBy("k")
+    group, order, succ, rows, schema, parts = _NUMBERING_CASES[case]
+    df = spark.createDataFrame(rows, schema).repartition(16)
+    part = Window.partitionBy(*([group] if group else []))
+    w = part.orderBy(*order)
     expected = {
-        (r["g"], r["k"]): (r["cum"], r["idx"])
+        tuple(r[:3]): (r["cum"], r["idx"], r["n"])
         for r in df.withColumn(
             "cum",
-            F.coalesce(F.sum("succ").over(
+            F.coalesce(F.sum(succ).over(
                 w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)),
-        ).withColumn("idx", F.row_number().over(w)).collect()
+        ).withColumn("idx", F.row_number().over(w))
+         .withColumn("n", F.count("*").over(part)).collect()
     }
-    got = {
-        (r["g"], r["k"]): (r["cum"], r["idx"])
-        for r in attach_grouped_prefix(
-            df, "g", ["k"], "succ", "cum", "idx", num_partitions=13
-        ).collect()
-    }
+    kw = ({"known_count": len(rows)} if path == "window"
+          else {"num_partitions": parts})
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(batch_conf)
+    spark.conf.set(batch_conf, "7")
+    try:
+        out = attach_grouped_prefix(df, group, order, "idx", sum_col=succ,
+                                    cum_col="cum", count_col="n", **kw)
+        got = {tuple(r[:3]): (r["cum"], r["idx"], r["n"])
+               for r in out.collect()}
+        # row number alone, the shape of the canonical crawl seq
+        seq_only = attach_grouped_prefix(df, group, order, "idx", **kw)
+        got_idx = {tuple(r[:3]): r["idx"] for r in seq_only.collect()}
+    finally:
+        spark.conf.set(batch_conf, old)
     assert got == expected
-    # the scale-adaptive window fallback (known_count below threshold)
-    # must agree with the prefix path value-for-value, types included
-    win = attach_grouped_prefix(
-        df, "g", ["k"], "succ", "cum", "idx", known_count=5000
-    )
-    got_win = {(r["g"], r["k"]): (r["cum"], r["idx"])
-               for r in win.collect()}
-    assert got_win == expected
-    assert dict(win.dtypes)["cum"] == "bigint"
-    assert dict(win.dtypes)["idx"] == "bigint"
+    assert got_idx == {k: v[1] for k, v in expected.items()}
+    assert seq_only.columns == df.columns + ["idx"]
+    assert {c: t for c, t in out.dtypes if c in ("cum", "idx", "n")} == \
+        {"cum": "bigint", "idx": "bigint", "n": "bigint"}
+
+
+@pytest.mark.parametrize("path", ["window", "range"])
+def test_numbering_callers_match_oracle(spark, sf_dir, monkeypatch, path):
+    """Every analytics query built on attach_grouped_prefix equals its
+    DuckDB oracle on both paths of the primitive: the default threshold
+    (the window at sf0.001) and the range path forced by a threshold
+    of 0."""
+    import sparkharvester.seq as seq
+    from sparkharvester.registry import all_queries
+    from tools.compare import compare, duck_con
+
+    if path == "range":
+        monkeypatch.setattr(seq, "SEQ_WINDOW_THRESHOLD", 0)
+    con = duck_con(sf_dir)
+    queries = all_queries()
+    for name in ("curate_shards", "img_shards", "text_quality_buckets",
+                 "crawl_priority_order"):
+        q = queries[name]
+        ok, msg = compare(q.build(spark, sf_dir), q.oracle_sql(), con)
+        assert ok, f"{name} ({path} path): {msg}"
 
 
 def test_scalable_cap_window_crawl_identical(spark, monkeypatch):
@@ -307,36 +354,6 @@ def test_scalable_cap_window_crawl_identical(spark, monkeypatch):
                        for r in eng.pages.collect()}  # noqa: E731
     assert key(base) == key(scal)
     assert base.stats == scal.stats
-
-
-def test_global_seq_matches_window(spark):
-    """attach_global_seq == row_number over a global ORDER BY window."""
-    from pyspark.sql.window import Window
-
-    from sparkharvester.seq import attach_global_seq
-
-    rows = [(i % 7, f"k{i % 13:02d}-{i:04d}", i % 3) for i in range(997)]
-    df = spark.createDataFrame(rows, "a int, b string, c int").repartition(16)
-    expected = {
-        (r["a"], r["b"], r["c"]): r["seq"]
-        for r in df.withColumn(
-            "seq", F.row_number().over(Window.orderBy("c", "b", "a"))
-        ).collect()
-    }
-    got = {
-        (r["a"], r["b"], r["c"]): r["seq"]
-        for r in attach_global_seq(df, ["c", "b", "a"], "seq",
-                                   num_partitions=11).collect()
-    }
-    assert got == expected
-    # the small-output fast path (known_count ≤ threshold → plain window)
-    # must produce the identical numbering
-    fast = {
-        (r["a"], r["b"], r["c"]): r["seq"]
-        for r in attach_global_seq(df, ["c", "b", "a"], "seq",
-                                   known_count=997).collect()
-    }
-    assert fast == expected
 
 
 def test_robots_gating(spark):

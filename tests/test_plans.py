@@ -108,19 +108,42 @@ def test_range_join_is_hash_join_on_buckets(spark, sf_dir):
 
 def test_quality_buckets_no_rescan_and_no_lang_window(spark, sf_dir,
                                                       monkeypatch):
-    """Above the adaptive threshold: tercile counts read the
-    grouped-prefix localCheckpoint (no second parquet scan of
-    documents) and ranking never uses a per-language Window (the
-    dominant language would land in one task).  Below it: the oracle's
-    own two-window shape over a single scan, no join."""
+    """Above the adaptive threshold: ranks and language sizes come from
+    the grouped-prefix localCheckpoint and the driver's per-language
+    totals (no second parquet scan of documents, no join) and ranking
+    never uses a per-language Window (the dominant language would land
+    in one task).  Below it: the oracle's own two-window shape over a
+    single scan, no join."""
     import sparkharvester.seq as seq
 
     monkeypatch.setattr(seq, "SEQ_WINDOW_THRESHOLD", 0)   # force scale path
     plan = _plan(all_queries()["text_quality_buckets"].build(spark, sf_dir))
     assert "Scan parquet" not in plan
     assert "Window" not in plan
-    assert "BroadcastHashJoin" in plan      # |langs|-row counts broadcast
+    assert "Join" not in plan               # sizes are driver-side totals
     monkeypatch.undo()
     plan = _plan(all_queries()["text_quality_buckets"].build(spark, sf_dir))
     assert "Window" in plan                 # adaptive small path
     assert "Join" not in plan               # rank+count ride one shuffle
+
+
+def test_row_count_reads_footers_without_a_job(spark, sf_dir):
+    """session.row_count, the size bound the numbering callers pass as
+    known_count, equals Spark's count() for every table and starts no
+    Spark job."""
+    import glob
+    import os
+
+    from sparkharvester.session import load, row_count
+
+    sc = spark.sparkContext
+    for path in sorted(glob.glob(f"{sf_dir}/*.parquet")):
+        name = os.path.basename(path)[: -len(".parquet")]
+        group = f"row_count_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            n = row_count(sf_dir, name)
+            assert sc.statusTracker().getJobIdsForGroup(group) == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert n == load(spark, sf_dir, name).count(), name
