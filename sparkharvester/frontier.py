@@ -86,7 +86,6 @@ class CrawlConfig:
     crawl_delay: float = DEFAULT_CRAWL_DELAY
     blacklist: list[str] = dc_field(default_factory=lambda: list(DEFAULT_BLACKLIST_PATHS))
     use_bloom: bool = False
-    bloom_fpp: float = 0.01
     host_tokens_per_round: int | None = None   # None = politeness parity mode
     max_retries: int = 0   # >0: failed fetches re-enqueue with not_before
     # host -> robots rules: each entry is a str (legacy Disallow
@@ -104,11 +103,9 @@ class CrawlConfig:
     # with that round's partial-but-committed state; the run is
     # resumable from the same checkpoint_dir (exact-resume contract).
     stop_file: str | None = None
-    auto_robots: bool = False   # fetch-once-per-host robots cache table
-    # auto_robots rule source: False = legacy Disallow-prefix synth
-    # (bit-stable with earlier rounds), True = RFC 9309 mixed
-    # Allow/Disallow wildcard rule sets (synth.robots_rules_for_host)
-    rfc_robots: bool = False
+    # fetch-once-per-host robots cache table of RFC 9309 rule sets
+    # (synth.robots_rules_for_host)
+    auto_robots: bool = False
 
 
 @dataclass
@@ -122,7 +119,6 @@ class CrawlOutputs:
 
 
 SEEN_SCHEMA = "seed_id int, canon_url string"
-HASHES_SCHEMA = "content_hash string"
 PAGES_SCHEMA = (
     "seed_id int, url string, title string, text string, "
     "content_hash string, depth int, crawl_time double, "
@@ -134,28 +130,26 @@ METRICS_SCHEMA = (
 )
 # one row per (host, rule); a host with an empty robots.txt gets a
 # single NULL-pattern row so the cache still records the fetch.
-# allow=False rows are Disallow rules (the legacy prefix sets map to
-# these); allow=True rows are RFC 9309 Allow carve-outs.
+# allow=False rows are Disallow rules; allow=True rows are RFC 9309
+# Allow carve-outs.
 ROBOTS_SCHEMA = "host string, pattern string, allow boolean"
+# false-positive rate the bloom seen-sketch is sized for
+BLOOM_FPP = 0.01
 
 
-def _make_robots_fetch(seed: int, rfc: bool = False):
+def _make_robots_fetch(seed: int):
     """mapInPandas robots 'fetch' (deterministic synth) for uncached
-    hosts.  ``rfc=True`` fetches mixed Allow/Disallow wildcard rule
-    sets (synth.robots_rules_for_host); default stays the legacy
-    Disallow-prefix generator so existing runs are bit-stable."""
+    hosts: mixed Allow/Disallow wildcard rule sets
+    (synth.robots_rules_for_host)."""
     import pandas as pd
 
-    from .synth import robots_for_host, robots_rules_for_host
+    from .synth import robots_rules_for_host
 
     def fetch(batches):
         for pdf in batches:
             rows = []
             for host in pdf["host"]:
-                if rfc:
-                    rules = robots_rules_for_host(host, seed)
-                else:
-                    rules = [(p, False) for p in robots_for_host(host, seed)]
+                rules = robots_rules_for_host(host, seed)
                 rows.extend((host, p, a) for p, a in rules)
                 if not rules:
                     rows.append((host, None, None))
@@ -178,12 +172,12 @@ def _with_probe_key(df: DataFrame) -> DataFrame:
         F.col("seed_id").cast("string"), F.lit("|"), F.col("canon_url")))
 
 
-def _full_sketch(keyed: DataFrame, n_seen: int, fpp: float):
+def _full_sketch(keyed: DataFrame, n_seen: int):
     """Bloom over *keyed* sized with 4x headroom over *n_seen* keys, so
     a rebuild for outgrown geometry stays rare; ``(sketch, capacity)``."""
     capacity = max(4 * n_seen, 1024)
     return build_bloom(keyed, "probe_key", expected_items=capacity,
-                       fpp=fpp), capacity
+                       fpp=BLOOM_FPP), capacity
 
 
 def admit_per_host(
@@ -273,11 +267,10 @@ def run_crawl(
         counts = {int(k): v for k, v in manifest["counts"].items()}
         pops = {int(k): v for k, v in manifest["pops"].items()}
         n_seeds = manifest["n_seeds"]
-        frontier = store.read(spark, "frontier", manifest["round"])
+        frontier = store.read(spark, "frontier", FRONTIER_SCHEMA,
+                              manifest["round"])
         seen = store.read_deltas(spark, "seen_urls", SEEN_SCHEMA,
                                  manifest["round"])
-        seen_hashes = store.read_deltas(spark, "seen_hashes", HASHES_SCHEMA,
-                                        manifest["round"])
         # running seen-set size, carried in the manifest so bloom
         # sizing never needs a per-round full scan (VERDICT r2 #7);
         # one count() fallback for snapshots written before this field
@@ -305,7 +298,6 @@ def run_crawl(
             [(i, u) for i in range(n_seeds) for u in known], SEEN_SCHEMA,
         )
         init_seen_pending = seen
-        seen_hashes = spark.createDataFrame([], HASHES_SCHEMA)
         seen_total = n_seeds * len(known)
         sketch, sketch_capacity = None, 0
 
@@ -384,7 +376,7 @@ def run_crawl(
         if cfg.use_bloom and seen_total > 0:
             if sketch is None or seen_total > sketch_capacity:
                 sketch, sketch_capacity = _full_sketch(
-                    _with_probe_key(seen), seen_total, cfg.bloom_fpp)
+                    _with_probe_key(seen), seen_total)
             cand = anti_join_with_probe(
                 _with_probe_key(cand), seen, ["seed_id", "canon_url"],
                 bloom_probe_udf(spark, sketch), "probe_key",
@@ -422,8 +414,7 @@ def run_crawl(
             new_hosts = cand.select("host").distinct().join(
                 cached.select("host").distinct(), "host", "left_anti")
             fetched_robots = new_hosts.mapInPandas(
-                _make_robots_fetch(synth_cfg.seed, cfg.rfc_robots),
-                ROBOTS_SCHEMA)
+                _make_robots_fetch(synth_cfg.seed), ROBOTS_SCHEMA)
             store.write_delta(fetched_robots, "robots", round_no)
             robots_table = store.read_deltas(spark, "robots", ROBOTS_SCHEMA,
                                              round_no)
@@ -538,12 +529,16 @@ def run_crawl(
                                      .cast("int"))
 
         # ---- global content dedup (D1, canonical order) --------------------
+        # hashes seen in earlier rounds are those of the committed pages:
+        # only non-duplicate successes become pages, so each appears once
+        prior_hashes = store.read_deltas(
+            spark, "pages", PAGES_SCHEMA, round_no - 1).select("content_hash")
         eligible = F.col("ok") & ~F.col("blacklisted")
         w_hash = Window.partitionBy("content_hash").orderBy("canon_url", "seed_id")
         fetched = (
             fetched
             .withColumn("__rn", F.when(eligible, F.row_number().over(w_hash)))
-            .join(seen_hashes.withColumnRenamed("content_hash", "__prev_hash"),
+            .join(prior_hashes.withColumnRenamed("content_hash", "__prev_hash"),
                   F.col("content_hash") == F.col("__prev_hash"), "left")
             .withColumn(
                 "is_dup",
@@ -674,7 +669,7 @@ def run_crawl(
         if init_seen_pending is not None:
             seen_commit = seen_commit.unionByName(init_seen_pending)
             init_seen_pending = None
-        # the five snapshot writes are mutually independent and every
+        # the four snapshot writes are mutually independent and every
         # input frame above is cached, so run them as concurrent jobs
         # (guide §2.6 overlap-independent-jobs): each write's tail of
         # straggler tasks back-fills executors freed by the others.
@@ -687,8 +682,6 @@ def run_crawl(
         writes = [
             lambda: store.write(new_frontier, "frontier", round_no),
             lambda: store.write_delta(seen_commit, "seen_urls", round_no),
-            lambda: store.write_delta(results_r.select("content_hash"),
-                                      "seen_hashes", round_no),
             lambda: store.write_delta(results_r, "pages", round_no),
             lambda: store.write_delta(metrics_r, "metrics", round_no),
         ]
@@ -708,7 +701,7 @@ def run_crawl(
             delta_keyed = _with_probe_key(seen_commit).coalesce(4)
             if sketch is None:
                 sketch, sketch_capacity = _full_sketch(
-                    delta_keyed, seen_total, cfg.bloom_fpp)
+                    delta_keyed, seen_total)
             else:
                 sketch = sketch.merge(build_bloom(
                     delta_keyed, "probe_key", expected_items=1,
@@ -718,10 +711,8 @@ def run_crawl(
         fetched_raw.unpersist()
         exploded.unpersist()
         gated.unpersist()
-        frontier = store.read(spark, "frontier", round_no)
+        frontier = store.read(spark, "frontier", FRONTIER_SCHEMA, round_no)
         seen = store.read_deltas(spark, "seen_urls", SEEN_SCHEMA, round_no)
-        seen_hashes = store.read_deltas(spark, "seen_hashes", HASHES_SCHEMA,
-                                        round_no)
         store.commit({
             "round": round_no,
             "depth": depth,

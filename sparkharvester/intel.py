@@ -30,6 +30,8 @@ Semantics parity notes (vs intelligence.py):
 """
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -154,9 +156,7 @@ def category_hits(text_lower: Column, category: str) -> Column:
     )
 
 
-_UDF_CACHE: dict[str, object] = {}
-
-
+@functools.cache
 def _hits_udf():
     """Vectorized pandas UDF: text -> array<int> of the 9 per-category
     keyword hits (intelligence.py:303-304 semantics: lowercase,
@@ -173,24 +173,22 @@ def _hits_udf():
     then).  As a UDF output slot it is a cheap element_at everywhere.
     The word count is max(#\\S+ runs, 1), i.e. max(len(text.split()), 1)
     with Python's str.split() (no empty tokens), intelligence.py:299."""
-    if "hits" not in _UDF_CACHE:
-        import re
+    import re
 
-        from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-        kws = [[kw.lower() for kw in CATEGORIES[c]] for c in CATEGORY_ORDER]
-        ws_re = re.compile(r"\S+")
+    kws = [[kw.lower() for kw in CATEGORIES[c]] for c in CATEGORY_ORDER]
+    ws_re = re.compile(r"\S+")
 
-        def hits(texts: pd.Series) -> pd.Series:
-            tls = texts.str.lower()
-            return pd.Series(
-                [[sum(t.count(k) for k in cat) for cat in kws]
-                 + [max(len(ws_re.findall(t)), 1)] for t in tls],
-                index=texts.index,
-            )
+    def hits(texts: pd.Series) -> pd.Series:
+        tls = texts.str.lower()
+        return pd.Series(
+            [[sum(t.count(k) for k in cat) for cat in kws]
+             + [max(len(ws_re.findall(t)), 1)] for t in tls],
+            index=texts.index,
+        )
 
-        _UDF_CACHE["hits"] = pandas_udf(hits, "array<int>")
-    return _UDF_CACHE["hits"]
+    return pandas_udf(hits, "array<int>")
 
 
 def with_threat(df: DataFrame, text_col: str = "text") -> DataFrame:

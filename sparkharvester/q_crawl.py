@@ -630,9 +630,10 @@ def crawl_priority_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Robots gate as an oracle-checked query.  The crawl loop's robots path
 # (frontier.py: fetch-once cache table → broadcast join on host →
 # disallow-prefix startswith) was pytest-only; this expresses the SAME
-# predicate pipeline — md5-derived per-host disallow rule
-# (synth.robots_for_host: ~1/3 of hosts disallow one /pN prefix) +
-# broadcast membership join + prefix match — with hosts/paths
+# predicate pipeline — md5-derived per-host disallow rule (h = first 15
+# hex digits of md5('robots/42/' || host): a host with h % 3 = 0
+# disallows /p{h % 7} and, when also h % 5 = 0, /p{h % 10} if that
+# differs) + broadcast membership join + prefix match — with hosts/paths
 # synthesized identically in both dialects.  Scale shape matches the
 # runtime: the robots table is tiny (one row per disallowing host),
 # broadcast; the candidates never shuffle.
@@ -674,8 +675,8 @@ GROUP BY c.doc_id, c.host, c.path
     "crawl_robots_gate",
     oracle=_ROBOTS_SQL,
     doc="robots.txt disallow gate (north rule): md5-derived per-host "
-        "MULTI-prefix rules (synth.robots_for_host semantics: every "
-        "5th disallowing host carries a second rule) + broadcast "
+        "MULTI-prefix rules (~1/3 of hosts disallow one /pN prefix; "
+        "every 5th of those carries a second one) + broadcast "
         "membership join + per-candidate any-match — frontier.py "
         "robots path, driver-checkable",
 )

@@ -30,6 +30,8 @@ Scale notes:
 """
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,9 +58,6 @@ JACCARD_THRESHOLD = 0.8
 DF_CAP = 50             # drop shingles present in more docs (stop-shingles)
 
 _TOKEN_RE = r"[a-z0-9]+"
-
-_UDF_CACHE: dict[str, object] = {}
-
 
 # ---------------------------------------------------------------------------
 # shared fragments — DuckDB
@@ -146,6 +145,7 @@ def _minhash_sql_cols() -> str:
 # ---------------------------------------------------------------------------
 
 
+@functools.cache
 def _fused_sig_udf():
     """pandas UDF: text → struct(sigs array<long>, n int, sh array<string>).
 
@@ -153,44 +153,42 @@ def _fused_sig_udf():
     n = |sh| (0 ⇒ the doc has no shingle and is dropped by the caller's
     n > 0 filter — the UDF is nondeterministic so that filter cannot
     duplicate it, guide §4.4)."""
-    if "fused" not in _UDF_CACHE:
-        import hashlib
-        import re
+    import hashlib
+    import re
 
-        import numpy as np
+    import numpy as np
 
-        from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-        tok_re = re.compile(_TOKEN_RE)
-        j = np.arange(MINHASH_K, dtype=np.int64)
+    tok_re = re.compile(_TOKEN_RE)
+    j = np.arange(MINHASH_K, dtype=np.int64)
 
-        def fused(texts: pd.Series) -> pd.DataFrame:
-            sh_l, sig_l, n_l = [], [], []
-            for t in texts:
-                toks = tok_re.findall(t.lower())
-                sh = list(dict.fromkeys(
-                    f"{toks[i]} {toks[i + 1]} {toks[i + 2]}"
-                    for i in range(len(toks) - 2)))
-                n_l.append(len(sh))
-                sh_l.append(sh)
-                if not sh:
-                    sig_l.append(None)
-                    continue
-                h1 = np.empty(len(sh), dtype=np.int64)
-                h2 = np.empty(len(sh), dtype=np.int64)
-                for i, s in enumerate(sh):
-                    d = hashlib.md5(s.encode()).digest()
-                    h1[i] = int.from_bytes(d[0:8], "big") >> 4
-                    h2[i] = int.from_bytes(d[8:15], "big") | 1
-                sig_l.append((h1[:, None] + h2[:, None] * j[None, :])
-                             .min(axis=0).tolist())
-            return pd.DataFrame({"sigs": sig_l, "n": n_l, "sh": sh_l},
-                                index=texts.index)
+    def fused(texts: pd.Series) -> pd.DataFrame:
+        sh_l, sig_l, n_l = [], [], []
+        for t in texts:
+            toks = tok_re.findall(t.lower())
+            sh = list(dict.fromkeys(
+                f"{toks[i]} {toks[i + 1]} {toks[i + 2]}"
+                for i in range(len(toks) - 2)))
+            n_l.append(len(sh))
+            sh_l.append(sh)
+            if not sh:
+                sig_l.append(None)
+                continue
+            h1 = np.empty(len(sh), dtype=np.int64)
+            h2 = np.empty(len(sh), dtype=np.int64)
+            for i, s in enumerate(sh):
+                d = hashlib.md5(s.encode()).digest()
+                h1[i] = int.from_bytes(d[0:8], "big") >> 4
+                h2[i] = int.from_bytes(d[8:15], "big") | 1
+            sig_l.append((h1[:, None] + h2[:, None] * j[None, :])
+                         .min(axis=0).tolist())
+        return pd.DataFrame({"sigs": sig_l, "n": n_l, "sh": sh_l},
+                            index=texts.index)
 
-        _UDF_CACHE["fused"] = pandas_udf(
-            fused, "sigs array<long>, n int, sh array<string>"
-        ).asNondeterministic()
-    return _UDF_CACHE["fused"]
+    return pandas_udf(
+        fused, "sigs array<long>, n int, sh array<string>"
+    ).asNondeterministic()
 
 
 def _sigged(docs: DataFrame) -> DataFrame:
@@ -580,6 +578,7 @@ SELECT doc_id, CAST({combine} AS BIGINT) AS simhash FROM votes
 """
 
 
+@functools.cache
 def _simhash_udf():
     """Vectorized pandas SimHash: text -> 60-bit signature (or None for
     token-less docs, which the oracle's unnest also drops).
@@ -589,35 +588,33 @@ def _simhash_udf():
     but a zero-shuffle map stage, replacing the round-1
     explode + groupBy(60 partial aggs) plan (VERDICT r1 #7): at 100 TB
     the signature never leaves its input partition."""
-    if "simhash" not in _UDF_CACHE:
-        import hashlib
-        import re
+    import hashlib
+    import re
 
-        import numpy as np
-        from pyspark.sql.functions import pandas_udf
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
 
-        tok_re = re.compile(_TOKEN_RE)
-        bit_idx = np.arange(SIMHASH_BITS, dtype=np.int64)
+    tok_re = re.compile(_TOKEN_RE)
+    bit_idx = np.arange(SIMHASH_BITS, dtype=np.int64)
 
-        def sim(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                toks = set(tok_re.findall(t.lower()))
-                if not toks:
-                    out.append(None)
-                    continue
-                hs = np.fromiter(
-                    (int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-                     for s in toks),
-                    dtype=np.int64, count=len(toks),
-                )
-                bits = (hs[:, None] >> bit_idx) & 1          # (n_tok, 60)
-                votes = (2 * bits - 1).sum(axis=0)
-                out.append(int(((votes > 0).astype(np.int64) << bit_idx).sum()))
-            return pd.Series(out, index=texts.index, dtype="object")
+    def sim(texts: pd.Series) -> pd.Series:
+        out = []
+        for t in texts:
+            toks = set(tok_re.findall(t.lower()))
+            if not toks:
+                out.append(None)
+                continue
+            hs = np.fromiter(
+                (int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+                 for s in toks),
+                dtype=np.int64, count=len(toks),
+            )
+            bits = (hs[:, None] >> bit_idx) & 1          # (n_tok, 60)
+            votes = (2 * bits - 1).sum(axis=0)
+            out.append(int(((votes > 0).astype(np.int64) << bit_idx).sum()))
+        return pd.Series(out, index=texts.index, dtype="object")
 
-        _UDF_CACHE["simhash"] = pandas_udf(sim, "long")
-    return _UDF_CACHE["simhash"]
+    return pandas_udf(sim, "long")
 
 
 @register(
@@ -901,6 +898,7 @@ FROM ranked GROUP BY doc_id
 """
 
 
+@functools.cache
 def _cdc_chunker_udf():
     """Vectorized pandas content-defined chunker: footer-appended text →
     ordered chunk array.  Same semantics as the oracle's running-sum
@@ -911,39 +909,37 @@ def _cdc_chunker_udf():
     sf1.0).  Here the boundary test is memoized per worker (the token
     vocabulary is tiny relative to token occurrences), so each distinct
     token pays one md5 ever: 2.1 s → ~0.9 s map stage."""
-    if "cdc" not in _UDF_CACHE:
-        import hashlib
+    import hashlib
 
-        from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-        cache: dict[str, bool] = {}
+    cache: dict[str, bool] = {}
 
-        def is_boundary(tok: str) -> bool:
-            b = cache.get(tok)
-            if b is None:
-                b = int(hashlib.md5(tok.encode()).hexdigest()[:4], 16) \
-                    % CDC_K == 0
-                cache[tok] = b
-            return b
+    def is_boundary(tok: str) -> bool:
+        b = cache.get(tok)
+        if b is None:
+            b = int(hashlib.md5(tok.encode()).hexdigest()[:4], 16) \
+                % CDC_K == 0
+            cache[tok] = b
+        return b
 
-        def chunk(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                toks = t.split(" ")
-                chunks = []
-                cur = [toks[0]]
-                for x in toks[1:]:
-                    if is_boundary(x):
-                        chunks.append(" ".join(cur))
-                        cur = [x]
-                    else:
-                        cur.append(x)
-                chunks.append(" ".join(cur))
-                out.append(chunks)
-            return pd.Series(out, index=texts.index)
+    def chunk(texts: pd.Series) -> pd.Series:
+        out = []
+        for t in texts:
+            toks = t.split(" ")
+            chunks = []
+            cur = [toks[0]]
+            for x in toks[1:]:
+                if is_boundary(x):
+                    chunks.append(" ".join(cur))
+                    cur = [x]
+                else:
+                    cur.append(x)
+            chunks.append(" ".join(cur))
+            out.append(chunks)
+        return pd.Series(out, index=texts.index)
 
-        _UDF_CACHE["cdc"] = pandas_udf(chunk, "array<string>")
-    return _UDF_CACHE["cdc"]
+    return pandas_udf(chunk, "array<string>")
 
 
 @register(

@@ -10,6 +10,8 @@ zero shuffle except final aggregations, so they scale linearly to
 """
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,43 +61,37 @@ def _lang_score_sql(tl: str, lang: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-_SCORES_UDF_CACHE: dict[str, object] = {}
-
-
+@functools.cache
 def _scores_udf():
-    key = "scores"
-    if key not in _SCORES_UDF_CACHE:
-        import re
+    import re
 
-        import pandas as pd
+    import pandas as pd
 
-        from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-        lang_needles = [(lang, list(LANG_STOPWORDS[lang]))
-                        for lang in LANG_ORDER]
-        q_needles = [f" {w} " for w in QUALITY_STOPWORDS]
-        ws_re = re.compile(r"\S+")
+    lang_needles = [(lang, list(LANG_STOPWORDS[lang]))
+                    for lang in LANG_ORDER]
+    q_needles = [f" {w} " for w in QUALITY_STOPWORDS]
+    ws_re = re.compile(r"\S+")
 
-        def scores(texts):
-            cols: dict[str, list] = {f"sc_{lang}": []
-                                     for lang, _ in lang_needles}
-            n_stop, n_tok = [], []
-            for t in texts:
-                tl = f" {t.lower()} "
-                for lang, needles in lang_needles:
-                    cols[f"sc_{lang}"].append(
-                        sum(tl.count(n) for n in needles))
-                n_stop.append(sum(tl.count(n) for n in q_needles))
-                n_tok.append(max(len(ws_re.findall(t)), 1))
-            cols["n_stop"] = n_stop
-            cols["n_tok"] = n_tok
-            return pd.DataFrame(cols, index=texts.index)
+    def scores(texts):
+        cols: dict[str, list] = {f"sc_{lang}": []
+                                 for lang, _ in lang_needles}
+        n_stop, n_tok = [], []
+        for t in texts:
+            tl = f" {t.lower()} "
+            for lang, needles in lang_needles:
+                cols[f"sc_{lang}"].append(
+                    sum(tl.count(n) for n in needles))
+            n_stop.append(sum(tl.count(n) for n in q_needles))
+            n_tok.append(max(len(ws_re.findall(t)), 1))
+        cols["n_stop"] = n_stop
+        cols["n_tok"] = n_tok
+        return pd.DataFrame(cols, index=texts.index)
 
-        fields = ", ".join([f"sc_{lang} int" for lang in LANG_ORDER]
-                           + ["n_stop int", "n_tok long"])
-        _SCORES_UDF_CACHE[key] = pandas_udf(scores, fields) \
-            .asNondeterministic()
-    return _SCORES_UDF_CACHE[key]
+    fields = ", ".join([f"sc_{lang} int" for lang in LANG_ORDER]
+                       + ["n_stop int", "n_tok long"])
+    return pandas_udf(scores, fields).asNondeterministic()
 
 
 def _with_scores(df: DataFrame) -> DataFrame:
@@ -571,29 +567,24 @@ DECON_N = 4            # word n-gram order (match-length of the check)
 DECON_EVAL_MOD = 97    # doc_id % MOD == 0 forms the eval slice
 
 
+@functools.cache
 def _grams_udf(n: int):
     from pyspark.sql.functions import pandas_udf
 
     import pandas as pd
 
-    key = f"grams{n}"
-    if key not in _GRAMS_UDF_CACHE:
-        def grams(texts):
-            import re
+    def grams(texts):
+        import re
 
-            tok_re = re.compile(_REP_TOKEN_RE)
-            out = []
-            for t in texts:
-                toks = tok_re.findall(t.lower())
-                out.append([" ".join(toks[i:i + n])
-                            for i in range(len(toks) - n + 1)])
-            return pd.Series(out, index=texts.index)
+        tok_re = re.compile(_REP_TOKEN_RE)
+        out = []
+        for t in texts:
+            toks = tok_re.findall(t.lower())
+            out.append([" ".join(toks[i:i + n])
+                        for i in range(len(toks) - n + 1)])
+        return pd.Series(out, index=texts.index)
 
-        _GRAMS_UDF_CACHE[key] = pandas_udf(grams, "array<string>")
-    return _GRAMS_UDF_CACHE[key]
-
-
-_GRAMS_UDF_CACHE: dict[str, object] = {}
+    return pandas_udf(grams, "array<string>")
 
 
 def _decon_sql() -> str:

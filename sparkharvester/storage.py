@@ -6,9 +6,10 @@ renamed ``current`` pointer — the same commit protocol shape
 (write-new, swap-pointer) as Iceberg's metadata swap, behind a small
 adapter so a real cluster can substitute catalog tables without
 touching the engine.  Each crawl round commits one snapshot listing
-the four state tables (frontier, seen_urls, seen_hashes, pages) plus
+the four state tables (frontier, seen_urls, pages, metrics) plus
 round metadata — giving exact-resume (north rule; reference analog:
-SQLite known_urls, storage.py:94-105).
+SQLite known_urls, storage.py:94-105).  The cross-round content-hash
+set is read from the pages deltas, not stored apart.
 """
 from __future__ import annotations
 
@@ -37,8 +38,9 @@ class SnapshotStore:
         df.write.mode("overwrite").parquet(path)
         return path
 
-    def read(self, spark: SparkSession, table: str, version: int) -> DataFrame:
-        return spark.read.parquet(self._path(table, version))
+    def read(self, spark: SparkSession, table: str, schema: str,
+             version: int) -> DataFrame:
+        return spark.read.schema(schema).parquet(self._path(table, version))
 
     # -- append-only delta tables ---------------------------------------------
     # Accumulating tables (pages, seen, metrics) write one small delta per

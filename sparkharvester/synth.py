@@ -184,25 +184,6 @@ def make_fetch_stage(cfg: SynthConfig):
     return fetch
 
 
-def robots_for_host(host: str, seed: int = 42) -> list[str]:
-    """Deterministic synthetic robots.txt disallow prefixes per host
-    (the robots "fetch" of the sandbox).  ~1/3 of hosts disallow one
-    /pN prefix; of those, every 5th ALSO disallows a second prefix —
-    real robots files carry multiple rules, and the runtime gate is a
-    per-(host, prefix)-row any-match (frontier.py groupBy max), so the
-    generator exercises the multi-rule path."""
-    h = _h(f"robots/{seed}/{host}")
-    if h % 3 == 0:
-        prefixes = [f"/p{h % 7}"]
-        # single-digit second rule: prefix-matches /pN AND /pN0../pN9,
-        # so multi-rule hosts actually block extra pages at any
-        # pages_per_host; skip when it duplicates the first rule
-        if h % 5 == 0 and h % 10 != h % 7:
-            prefixes.append(f"/p{h % 10}")
-        return prefixes
-    return []
-
-
 def robots_rules_for_host(host: str, seed: int = 42) -> list[tuple[str, bool]]:
     """Deterministic RFC 9309 rule set per host: mixed Allow/Disallow
     with '*' wildcards and '$' anchors (robots.py semantics).  ~2/3 of

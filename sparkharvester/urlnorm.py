@@ -31,6 +31,7 @@ scale linearly, no shuffle.
 """
 from __future__ import annotations
 
+import functools
 from urllib.parse import parse_qsl, urlencode, urljoin, urlparse, urlunparse
 
 import pandas as pd
@@ -67,21 +68,20 @@ def _urljoin_batch(base: pd.Series, href: pd.Series) -> pd.Series:
     )
 
 
-# pandas_udf registration needs an active session, so build lazily.
-_UDF_CACHE: dict[str, object] = {}
+# pandas_udf registration needs an active session, so build lazily,
+# once per batch function.
+@functools.cache
+def _string_udf(batch_fn):
+    return pandas_udf(batch_fn, "string")
 
 
 def canonicalize_udf(col: Column) -> Column:
-    if "canon" not in _UDF_CACHE:
-        _UDF_CACHE["canon"] = pandas_udf(_canonicalize_batch, "string")
-    return _UDF_CACHE["canon"](col)
+    return _string_udf(_canonicalize_batch)(col)
 
 
 def urljoin_udf(base: Column, href: Column) -> Column:
     """RFC-3986 relative resolution + fragment strip (extractor.py:90)."""
-    if "urljoin" not in _UDF_CACHE:
-        _UDF_CACHE["urljoin"] = pandas_udf(_urljoin_batch, "string")
-    return _UDF_CACHE["urljoin"](base, href)
+    return _string_udf(_urljoin_batch)(base, href)
 
 
 # ---------------------------------------------------------------------------

@@ -63,11 +63,12 @@ def test_unknown_yaml_key_fails_loudly(tmp_path):
         load_config(str(y), env={})
 
 
-@pytest.mark.parametrize("key", ["use_cuckoo", "scalable_cap_window"])
+@pytest.mark.parametrize(
+    "key", ["use_cuckoo", "scalable_cap_window", "rfc_robots", "bloom_fpp"])
 def test_removed_crawl_key_fails_loudly(tmp_path, key):
-    """Options that only chose between implementations with identical
-    crawls were removed; a config that still sets one must not be
-    silently accepted."""
+    """Removed options must not be silently accepted: two chose between
+    implementations with identical crawls, one picked a synthetic
+    robots generator, and one is now a constant."""
     y = tmp_path / "c.yaml"
     y.write_text(f"crawler:\n  {key}: true\n")
     with pytest.raises(KeyError, match=key):

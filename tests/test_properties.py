@@ -181,3 +181,18 @@ def test_fused_sigs_equal_hexdigest_minhash(spark, sf_dir):
     assert {r.doc_id: r.sigs for r in rows} == expect
     assert all(r.n == len(r.sh) == len(set(r.sh)) for r in rows)
     assert {r.doc_id: r.n for r in rows}[-1] == 4
+
+
+def test_udf_factories_build_once(spark):
+    """Each pandas-UDF factory builds its UDF once per argument: repeated
+    calls return the same object."""
+    from sparkharvester import intel, q_dedup, q_text, urlnorm
+
+    for factory in (intel._hits_udf, q_dedup._fused_sig_udf,
+                    q_dedup._simhash_udf, q_dedup._cdc_chunker_udf,
+                    q_text._scores_udf):
+        assert factory() is factory(), factory.__name__
+    assert q_text._grams_udf(4) is q_text._grams_udf(4)
+    assert q_text._grams_udf(3) is not q_text._grams_udf(4)
+    for batch_fn in (urlnorm._canonicalize_batch, urlnorm._urljoin_batch):
+        assert urlnorm._string_udf(batch_fn) is urlnorm._string_udf(batch_fn)

@@ -140,9 +140,8 @@ def test_crawl_anchor_blocks_exact_path_only(spark):
 
 
 def test_auto_robots_rfc_mode(spark):
-    """auto_robots + rfc_robots=True: the cache carries mixed
-    Allow/Disallow rules and no crawled page violates the RFC
-    decision of its host's rule set."""
+    """auto_robots: the cache carries mixed Allow/Disallow rules and no
+    crawled page violates the RFC decision of its host's rule set."""
     import tempfile
 
     from sparkharvester.frontier import ROBOTS_SCHEMA
@@ -154,7 +153,7 @@ def test_auto_robots_rfc_mode(spark):
     eng = run_crawl(
         spark, seeds, synth,
         CrawlConfig(max_depth=2, max_pages=80, auto_robots=True,
-                    rfc_robots=True, checkpoint_dir=root),
+                    checkpoint_dir=root),
     )
     store = SnapshotStore(root)
     cache = store.read_deltas(spark, "robots", ROBOTS_SCHEMA, eng.rounds - 1)
